@@ -1,11 +1,9 @@
 """From-scratch GIF codec (GIF87a/89a): LZW + palettes + interlace,
 pure numpy/stdlib — no Pillow, no native deps.
 
-GIF is the web crawl's fourth image format (after jpeg/png/bmp, all of
-which already decode with built-in codecs — ``functions/jpeg.py``,
-``operators/multimodal.decode_png``). This module completes the set
-from the public specification (GIF89a spec, CompuServe 1990; the LZW
-variant is the 12-bit variable-width code described there):
+Written from the public specification (GIF89a spec, CompuServe 1990;
+the LZW variant is the 12-bit variable-width code described there). No
+registered query or pipeline stage calls it. It covers:
 
 * logical screen descriptor + global/local color tables;
 * image descriptors, including per-frame palettes and the 4-pass
@@ -13,14 +11,13 @@ variant is the 12-bit variable-width code described there):
 * extension blocks (graphic control / comment / application) parsed and
   skipped — transparency is deliberately IGNORED when converting to
   RGB, matching what ``PIL.Image.convert("RGB")`` does on a P-mode
-  frame, so the optional-Pillow path and the built-in path agree;
+  frame;
 * LZW with LSB-first bit packing, variable code width 3..12 bits,
   clear/EOI codes, and the "deferred clear" case (a full 4095-entry
   table with no clear code keeps emitting 12-bit codes);
 * animation: every frame decodes; ``decode_gif`` returns the FIRST
   frame composited onto the logical screen (Pillow's default frame),
-  ``decode_gif_frames`` yields all of them for the frame-sampling
-  operators.
+  ``decode_gif_frames`` yields all of them.
 
 The encoder exists to make the decoder testable without fixtures from
 an external tool: real LZW compression (greedy longest-match against a

@@ -609,6 +609,36 @@ _PLANT_EVERY = 20
 _PLANT_ID_OFFSET = 1_000_000
 
 
+_UNROLLED_DIM = 64
+
+
+def _neardup_dot(a: str, b: str):
+    """Dot product of array<double> columns ``a`` and ``b`` as the left fold
+    ``((0.0 + a1*b1) + a2*b2) + ...``.
+
+    The per-candidate dot is ``embedding_neardup``'s hot loop (millions of
+    64-dim pairs at sf1.0), and aggregate/zip_with HOFs evaluate
+    INTERPRETED. For the fixed eval dim the unrolled expression performs
+    the IDENTICAL sequence of IEEE-754 operations as the HOF's left fold,
+    so the doubles are bit-identical, while compiling through whole-stage
+    codegen; the size guard keeps the general HOF for any other dimension.
+    """
+    unrolled = F.lit(0.0)
+    for i in range(1, _UNROLLED_DIM + 1):
+        unrolled = unrolled + (
+            F.element_at(F.col(a), i) * F.element_at(F.col(b), i)
+        )
+    hof = F.aggregate(
+        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    fixed_dim = (F.size(F.col(a)) == _UNROLLED_DIM) & (
+        F.size(F.col(b)) == _UNROLLED_DIM
+    )
+    return F.when(fixed_dim, unrolled).otherwise(hof)
+
+
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ 0.95 over the embeddings
     table augmented with planted near-identical copies (see above).
@@ -667,29 +697,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(*[F.col("cell").bitwiseXOR(F.lit(f)) for f in _PROBE_FLIPS])
         ).alias("cell"),
     )
-    hof_dot = F.aggregate(
-        F.zip_with(F.col("pv"), F.col("v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # r6: the per-candidate dot is the query's hot loop (millions of
-    # 64-dim pairs at sf1.0), and aggregate/zip_with HOFs evaluate
-    # INTERPRETED. For the fixed eval dim an unrolled expression —
-    # ((0.0 + p1) + p2) + ... over element-wise products — performs the
-    # IDENTICAL sequence of IEEE-754 operations as the HOF's left fold,
-    # so the doubles are bit-identical, while compiling through
-    # whole-stage codegen; the size guard keeps the general HOF for any
-    # other dimension.
-    _DIM = 64
-    unrolled = F.lit(0.0)
-    for _i in range(1, _DIM + 1):
-        unrolled = unrolled + (
-            F.element_at(F.col("pv"), _i) * F.element_at(F.col("v"), _i)
-        )
-    dot = F.when(
-        (F.size(F.col("pv")) == _DIM) & (F.size(F.col("v")) == _DIM),
-        unrolled,
-    ).otherwise(hof_dot)
+    dot = _neardup_dot("pv", "v")
 
     pairs = (
         probes.alias("a")

@@ -1,54 +1,17 @@
-"""Multimodal columns: opaque binary payloads + typed metadata + decode.
-
-A 100 TB training-data lakehouse carries image/audio/video as ``binary``
-columns next to text. Decode here is REAL for the four formats that need
-no external codec library — 16-bit PCM WAV (RIFF chunk walk +
-``np.frombuffer``), 24-bpp uncompressed BMP (header parse + padded-row
-reshape), 8-bit PNG (full chunk walk + CRC check + stdlib-zlib
-inflate + all-five-filter unfiltering in ``decode_png``), and JPEG —
-both baseline/multi-scan sequential AND progressive (from-scratch
-ITU-T T.81 codec in ``functions/jpeg.py``: Annex K tables, canonical
-Huffman, matrix DCT, spectral selection + successive approximation;
-4:4:4, 4:2:2, 4:2:0 + grayscale; DRI/RSTn restart intervals) — plus a
-nearest-neighbor ``resize`` kernel.
-Remaining variants (arithmetic / 16-bit jpeg,
-sub-byte-depth PNG) decode through the PLUGGABLE registry: if
-the optional public Pillow dependency is importable on the executors,
-``decode_image`` prefers it; otherwise unsupported variants raise a
-clearly-marked ``NotImplementedError`` (feature extraction falls back to
-the deterministic stub). Video: ISO-BMFF (mp4) and RIFF/AVI container
-METADATA — duration, dimensions, stream count — parse for REAL via pure
-struct walks (``parse_mp4_metadata``, ``functions/avi.py``); frame
-DECODE is REAL for MJPEG-AVI (per-frame built-in JPEG) and animated GIF
-(``video_frame_features``), and stays a declared stub only for
-entropy-coded codecs (H.264/mp4) — ffmpeg is out of scope. The dispatch, schema, Arrow batch shape, ``mapInPandas``
-iterator signatures, and metadata projection are identical either way, so
-a production deployment only adds the codec libs to its executor image.
-
-Reference analog: the html ``binary`` column of ``pages`` and its
-extraction UDF (``extract.py``); the reference's own batched tensor kernels
-(``sapbert/model/model_wrapper.py:169-233``) are the vectorized-UDF shape
-reused here.
-"""
+"""Binary-payload columns: the oracle-checked ``media_bytes_stats`` query
+plus standalone pure-numpy codecs for PCM16 WAV, 24-bpp BMP and PNG
+(8/16-bit, Adam7 interlace), magic-byte sniffing and a nearest-neighbour
+resize. No registered query or pipeline stage calls the codecs;
+``media_bytes_stats`` only measures payload lengths and decodes nothing."""
 
 from __future__ import annotations
 
 import struct
 import zlib
-from hashlib import blake2b
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FEATURE_DIM = 16
-
-MEDIA_SCHEMA = (
-    "media_id long, url string, kind string, payload binary, "
-    "width int, height int, duration_ms int"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -317,8 +280,7 @@ def decode_png(payload: bytes) -> np.ndarray:
     layouts (seven independently-filtered sub-images scattered back),
     color types 0 (gray), 2 (RGB), 3 (palette via PLTE), 4 (gray+alpha),
     6 (RGBA); alpha is dropped, gray broadcast to 3 channels. Sub-byte
-    depths (1/2/4-bit) raise ``NotImplementedError`` (the pluggable
-    Pillow path picks those up when present)."""
+    depths (1/2/4-bit) raise ``NotImplementedError``."""
     if len(payload) < 8 or payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
     pos = 8
@@ -350,8 +312,8 @@ def decode_png(payload: bytes) -> np.ndarray:
         raise ValueError(f"bad PNG header (color_type={color_type})")
     if depth not in (8, 16) or interlace not in (0, 1):
         raise NotImplementedError(
-            f"PNG depth={depth} interlace={interlace} needs the optional "
-            "Pillow codec (8/16-bit, interlace 0/1 decode built-in)"
+            f"PNG depth={depth} interlace={interlace} is not supported "
+            "(8/16-bit, interlace 0/1 decode built-in)"
         )
     if depth == 16 and color_type == 3:
         raise ValueError("palette PNG cannot be 16-bit")
@@ -405,29 +367,6 @@ def decode_png(payload: bytes) -> np.ndarray:
     return px[:, :, :3]  # RGB / RGBA (alpha dropped)
 
 
-# ---------------------------------------------------------------------------
-# pluggable compressed-image codec (optional public dependency: Pillow)
-# ---------------------------------------------------------------------------
-
-_PIL_UNSET = object()
-_PIL_CACHE = _PIL_UNSET
-
-
-def _pil():
-    """Import-try Pillow once per process (executors each do their own).
-    Returns ``PIL.Image`` or None — the registry key for whether jpeg/png
-    decode is real or the declared stub in this deployment."""
-    global _PIL_CACHE
-    if _PIL_CACHE is _PIL_UNSET:
-        try:
-            from PIL import Image  # optional public dependency
-
-            _PIL_CACHE = Image
-        except ImportError:
-            _PIL_CACHE = None
-    return _PIL_CACHE
-
-
 def sniff_image_format(payload: bytes) -> str | None:
     """Magic-byte sniff: 'bmp' | 'jpeg' | 'png' | 'gif' | None."""
     if payload is None or len(payload) < 8:
@@ -443,588 +382,21 @@ def sniff_image_format(payload: bytes) -> str | None:
     return None
 
 
-def decode_image(payload: bytes) -> np.ndarray:
-    """Image decode dispatch → uint8 (h, w, 3) RGB.
-
-    BMP, PNG (8/16-bit, Adam7 interlaced or not), GIF (87a/89a LZW,
-    global/local palettes, interlace, animation first frame —
-    ``functions/gif.py``) and jpeg
-    (baseline/multi-scan/progressive; 4:4:4, 4:2:0, 4:2:2, grayscale;
-    restart intervals — ``functions/jpeg.py``) decode with the built-in
-    pure-numpy codecs — no external dependency. The residual variants
-    (sub-byte-depth PNG, arithmetic / 16-bit jpeg)
-    decode for REAL when Pillow is importable (optional public
-    dependency — the core never requires it); without it they raise
-    ``NotImplementedError`` with an actionable message, exactly the
-    declared-stub boundary."""
-    kind = sniff_image_format(payload)
-    if kind == "bmp":
-        return decode_bmp(payload)
-    if kind == "gif":
-        try:
-            # built-in real codec (functions/gif.py): LZW, global/local
-            # palettes, interlace, animation-first-frame
-            from ..functions.gif import decode_gif
-
-            return decode_gif(payload)
-        except ValueError:
-            if _pil() is None:
-                raise
-            import io
-
-            image_mod = _pil()
-            with image_mod.open(io.BytesIO(payload)) as im:
-                return np.asarray(im.convert("RGB"))
-    if kind == "png":
-        try:
-            return decode_png(payload)  # built-in real codec, no deps
-        except (NotImplementedError, ValueError):
-            if _pil() is None:
-                raise
-            # sub-byte-depth variants — and corrupt-looking files
-            # (CRC mismatch etc.) that a battle-tested decoder may still
-            # salvage — fall through to Pillow
-    if kind in ("jpeg", "png"):
-        image_mod = _pil()
-        if image_mod is not None:
-            # Pillow when present: covers subsampled/progressive jpeg and
-            # the exotic PNG variants
-            import io
-
-            with image_mod.open(io.BytesIO(payload)) as im:
-                return np.asarray(im.convert("RGB"))
-        if kind == "jpeg":
-            # built-in from-scratch codec (ITU T.81: sequential +
-            # progressive; 4:4:4, 4:2:2, 4:2:0 or grayscale; restart
-            # intervals); arithmetic / 16-bit variants raise with an
-            # actionable message
-            from ..functions.jpeg import decode_jpeg
-
-            return decode_jpeg(payload)
-        raise NotImplementedError(
-            f"{kind} decode variant needs the optional Pillow dependency "
-            "(pip install pillow on the executor image) — or "
-            "pre-transcode payloads to PNG/24bpp-BMP for the built-in codecs"
-        )
-    raise ValueError("unrecognized image payload (not BMP/JPEG/PNG)")
-
-
 def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize via index arithmetic (the resize kernel of
-    the brief — pure numpy, exact and deterministic)."""
+    """Nearest-neighbor resize via index arithmetic (pure numpy, exact
+    and deterministic)."""
     h, w = img.shape[:2]
     rows = (np.arange(out_h) * h) // out_h
     cols = (np.arange(out_w) * w) // out_w
     return img[rows[:, None], cols[None, :]]
 
 
-def synthesize_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic media table: REAL payloads for audio (PCM16 WAV sine +
-    noise) and image (alternating 24bpp BMP — widths chosen to exercise row
-    padding — and zlib-compressed PNG cycling through all five row
-    filters); video carries a REAL ISO-BMFF skeleton whose container
-    metadata parses for real — only frame decode is the declared
-    stub."""
-    rng = np.random.RandomState(seed)
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        if kind == "audio":
-            rate = 8000
-            dur_ms = 1000 * (1 + i % 30)
-            t = np.arange(int(rate * dur_ms / 1000))
-            freq = 100 + (i % 5) * 50
-            wave = 0.5 * np.sin(2 * np.pi * freq * t / rate)
-            wave += 0.01 * rng.standard_normal(len(t))
-            payload = encode_wav(
-                np.clip(wave * 32767, -32768, 32767).astype(np.int16), rate
-            )
-            width = height = None
-        elif kind == "image":
-            # odd widths exercise the 4-byte BMP row padding
-            width, height = 5 + (i % 4), 4 + (i % 3)
-            rgb = rng.randint(0, 256, size=(height, width, 3), dtype=np.uint8)
-            style = (i // 3) % 3
-            if style == 0:
-                payload = encode_bmp(rgb)
-            elif style == 1:  # PNG cycles through every row-filter type
-                payload = encode_png(rgb, filter_type=(i // 9) % 5)
-            else:  # real baseline JPEG (built-in T.81 codec)
-                from ..functions.jpeg import encode_jpeg
-
-                payload = encode_jpeg(rgb)
-            dur_ms = None
-        else:
-            # REAL ISO-BMFF skeleton: container metadata parses for real
-            # (parse_mp4_metadata); frame decode stays the declared stub
-            width, height = 320 + 16 * (i % 4), 240 + 16 * (i % 3)
-            dur_ms = 1000 * (1 + i % 30)
-            payload = encode_mp4_skeleton(dur_ms, width, height)
-            width = height = None  # metadata columns mirror a raw crawl
-        rows.append(
-            (
-                i,
-                f"https://cdn.example.com/{kind}/{i}",
-                kind,
-                payload,
-                width,
-                height,
-                dur_ms,
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# real container parser: mp4 / ISO-BMFF metadata (pure struct, no ffmpeg)
-# ---------------------------------------------------------------------------
-
-
-def encode_mp4_skeleton(
-    duration_ms: int, width: int | None = None, height: int | None = None
-) -> bytes:
-    """Minimal valid ISO-BMFF skeleton (ftyp + moov(mvhd [+ trak(tkhd)]))
-    — fixture encoder; also documents the exact box layout
-    ``parse_mp4_metadata`` walks. No mdat: frame DECODE stays the
-    declared ffmpeg-needing stub; container METADATA is real."""
-
-    def box(btype: bytes, body: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(body)) + btype + body
-
-    timescale = 1000
-    mvhd = box(
-        b"mvhd",
-        struct.pack(">B3x", 0)  # version 0
-        + struct.pack(">IIII", 0, 0, timescale, duration_ms)
-        + struct.pack(">iH2x", 0x00010000, 0x0100)  # rate, volume
-        + b"\x00" * 8
-        + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + b"\x00" * 24
-        + struct.pack(">I", 2),  # next_track_id
-    )
-    traks = b""
-    if width is not None and height is not None:
-        tkhd = box(
-            b"tkhd",
-            struct.pack(">B3x", 0)
-            + struct.pack(">IIIII", 0, 0, 1, 0, duration_ms)
-            + b"\x00" * 8
-            + struct.pack(">HHH2x", 0, 0, 0)  # layer, group, volume
-            + struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-            + struct.pack(">II", width << 16, height << 16),  # 16.16 fixed
-        )
-        traks = box(b"trak", tkhd)
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
-    return ftyp + box(b"moov", mvhd + traks)
-
-
-def parse_mp4_metadata(payload: bytes) -> dict:
-    """ISO-BMFF box walk → {duration_ms, width, height, n_tracks}.
-
-    Real container parsing (size/type headers, 64-bit largesize,
-    version-0/1 mvhd and tkhd, nested moov/trak traversal) — the
-    metadata a crawl pipeline filters and shards on BEFORE any frame
-    ever needs decoding. Not an mp4 decoder: sample tables and codec
-    payloads are untouched (frame decode remains the declared stub).
-    Raises ``ValueError`` for non-BMFF bytes or a missing moov."""
-    if payload is None or len(payload) < 8:
-        raise ValueError("mp4: not an ISO-BMFF payload")
-
-    def walk(lo: int, hi: int):
-        pos = lo
-        while pos + 8 <= hi:
-            size = struct.unpack(">I", payload[pos : pos + 4])[0]
-            btype = payload[pos + 4 : pos + 8]
-            body = pos + 8
-            if size == 1:  # 64-bit largesize
-                if pos + 16 > hi:
-                    raise ValueError("mp4: truncated largesize box")
-                size = struct.unpack(">Q", payload[pos + 8 : pos + 16])[0]
-                body = pos + 16
-            elif size == 0:  # box extends to end of enclosing container
-                size = hi - pos
-            if size < 8 or pos + size > hi:
-                raise ValueError("mp4: bad box size")
-            yield btype, body, pos + size
-            pos += size
-
-    top = {btype: (body, end) for btype, body, end in walk(0, len(payload))}
-    if b"ftyp" not in top or b"moov" not in top:
-        raise ValueError("mp4: missing ftyp/moov")
-    meta = {"duration_ms": None, "width": None, "height": None, "n_tracks": 0}
-    moov_body, moov_end = top[b"moov"]
-    for btype, body, end in walk(moov_body, moov_end):
-        if btype == b"mvhd":
-            version = payload[body]
-            if version == 1:
-                timescale = struct.unpack(">I", payload[body + 20 : body + 24])[0]
-                duration = struct.unpack(">Q", payload[body + 24 : body + 32])[0]
-            else:
-                timescale, duration = struct.unpack(
-                    ">II", payload[body + 12 : body + 20]
-                )
-            if timescale:
-                meta["duration_ms"] = int(duration * 1000 // timescale)
-        elif btype == b"trak":
-            meta["n_tracks"] += 1
-            for t2, b2, _e2 in walk(body, end):
-                if t2 == b"tkhd":
-                    off = b2 + (32 if payload[b2] == 0 else 44)
-                    # layer..volume (8) + matrix (36) precede width/height
-                    wh = off + 8 + 36
-                    w16, h16 = struct.unpack(">II", payload[wh : wh + 8])
-                    if w16 and h16:
-                        meta["width"] = w16 >> 16
-                        meta["height"] = h16 >> 16
-    return meta
-
-
-def video_metadata(media: DataFrame) -> DataFrame:
-    """Per-video container metadata via the REAL container parsers —
-    ISO-BMFF (mp4) or RIFF (AVI, ``functions/avi.py``), dispatched by
-    magic bytes — Arrow batches through ``mapInPandas`` (same vectorized
-    shape as ``image_features``); unparseable payloads yield a typed
-    null row, never a crash."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.avi import parse_avi_metadata
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload[:4] == b"RIFF":
-                        a = parse_avi_metadata(payload)
-                        m = {
-                            "duration_ms": a["duration_ms"],
-                            "width": a["width"],
-                            "height": a["height"],
-                            "n_tracks": a["n_streams"],
-                        }
-                    else:
-                        m = parse_mp4_metadata(payload)
-                    out.append(
-                        (
-                            int(mid),
-                            m["duration_ms"],
-                            m["width"],
-                            m["height"],
-                            m["n_tracks"],
-                        )
-                    )
-                except (ValueError, struct.error, TypeError):
-                    out.append((int(mid), None, None, None, None))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id",
-                    "duration_ms",
-                    "width",
-                    "height",
-                    "n_tracks",
-                ],
-            )
-
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "payload")
-        .mapInPandas(
-            run,
-            "media_id long, duration_ms long, width int, height int, "
-            "n_tracks int",
-        )
-    )
-
-
-def _decode_stub(payload: bytes, kind: str) -> np.ndarray:
-    """STUB for codecs that need external libraries (jpeg/mp4...): a
-    deterministic FEATURE_DIM-float vector derived from the payload bytes.
-    A production deployment replaces this body with ffmpeg/PIL decode + a
-    feature head; the signature (bytes, kind) -> float32[FEATURE_DIM] is
-    the contract. WAV and BMP payloads never reach it — they decode for
-    real (see ``_decode_features`` dispatch)."""
-    if payload is None:
-        return np.zeros(FEATURE_DIM, dtype=np.float32)
-    digest = blake2b(payload, digest_size=8).digest()
-    rng = np.random.RandomState(int.from_bytes(digest[:4], "big"))
-    return rng.standard_normal(FEATURE_DIM).astype(np.float32)
-
-
-def _wav_feature_vec(payload: bytes) -> np.ndarray:
-    rate, wave = decode_wav(payload)
-    n = len(wave)
-    out = np.zeros(FEATURE_DIM, dtype=np.float32)
-    if n == 0:
-        return out
-    zc = int(np.count_nonzero(np.diff(np.signbit(wave))))
-    out[:6] = (
-        n / rate,                       # duration seconds
-        float(np.sqrt(np.mean(wave**2))),  # rms
-        zc / n,                         # zero-crossing rate
-        float(np.max(np.abs(wave))),    # peak
-        float(np.mean(wave)),           # dc offset
-        float(np.std(wave)),
-    )
-    # 8 coarse energy bands over time (frame-sampled envelope)
-    bands = np.array_split(wave, 8)
-    out[6:14] = [float(np.sqrt(np.mean(b**2))) if len(b) else 0.0 for b in bands]
-    return out
-
-
-def _image_feature_vec(payload: bytes) -> np.ndarray:
-    img = decode_image(payload)
-    out = np.zeros(FEATURE_DIM, dtype=np.float32)
-    scaled = img.astype(np.float64) / 255.0
-    out[:2] = (img.shape[1], img.shape[0])  # w, h
-    out[2:5] = scaled.mean(axis=(0, 1))     # channel means
-    out[5:8] = scaled.std(axis=(0, 1))      # channel stds
-    # 2x4 nearest-neighbor thumbnail, grayscale — the resize op in-flow
-    thumb = resize_nearest(scaled.mean(axis=2), 2, 4)
-    out[8:16] = thumb.reshape(-1)
-    return out
-
-
-def _decode_features(payload: bytes, kind: str) -> np.ndarray:
-    """Decode dispatch: real WAV decode by magic sniff; images (BMP/PNG
-    always via the built-in codecs, jpeg when Pillow is present) through
-    ``decode_image``; everything unimplemented in this deployment falls
-    back to the declared stub."""
-    if payload is None:
-        return np.zeros(FEATURE_DIM, dtype=np.float32)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return _wav_feature_vec(payload)
-    if sniff_image_format(payload) is not None:
-        try:
-            return _image_feature_vec(payload)
-        except (NotImplementedError, ValueError, TypeError):
-            # codec absent here, or a corrupt payload — at crawl scale
-            # corrupt bytes are routine; never crash the feature job
-            return _decode_stub(payload, kind)
-    return _decode_stub(payload, kind)
-
-
-def extract_features(media: DataFrame, batch_hint: int = 256) -> DataFrame:
-    """payload binary → feature array<float>, via mapInPandas.
-
-    The iterator form keeps per-partition state (a real decoder would hold
-    its codec context here) and streams Arrow batches — payloads never
-    materialize as one big driver-side list."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                [float(x) for x in _decode_features(p, k)]
-                for p, k in zip(pdf["payload"], pdf["kind"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "feature": feats,
-                    "payload_bytes": [
-                        len(p) if p is not None else 0 for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return media.mapInPandas(
-        run,
-        "media_id long, kind string, feature array<float>, payload_bytes long",
-    )
-
-
-def audio_features(media: DataFrame) -> DataFrame:
-    """REAL audio decode operator: WAV payloads → typed waveform stats
-    (sample_rate, n_samples, duration_ms, rms, zero-crossing rate, peak)
-    via ``mapInPandas``. Payloads that are not PCM16 WAV yield a null row
-    (logged by count, never a crash mid-job)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    rate, wave = decode_wav(p)
-                except (ValueError, NotImplementedError, TypeError):
-                    rows.append((int(mid), None, None, None, None, None, None))
-                    continue
-                n = len(wave)
-                zc = int(np.count_nonzero(np.diff(np.signbit(wave)))) if n else 0
-                rows.append(
-                    (
-                        int(mid),
-                        int(rate),
-                        n,
-                        int(round(1000 * n / rate)),
-                        float(np.sqrt(np.mean(wave**2))) if n else 0.0,
-                        zc / n if n else 0.0,
-                        float(np.max(np.abs(wave))) if n else 0.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples", "duration_ms",
-                    "rms", "zcr", "peak",
-                ],
-            )
-
-    return media.filter(F.col("kind") == "audio").select(
-        "media_id", "payload"
-    ).mapInPandas(
-        run,
-        "media_id long, sample_rate int, n_samples long, duration_ms long, "
-        "rms double, zcr double, peak double",
-    )
-
-
-def image_features(media: DataFrame, thumb_h: int = 2, thumb_w: int = 4) -> DataFrame:
-    """REAL image decode operator: BMP + 8-bit PNG (built-in codecs) and —
-    when the optional Pillow dependency is on the executors — jpeg payloads →
-    (width, height, channel means) plus a nearest-neighbor-resized
-    grayscale thumbnail (the resize/feature-extract step of the brief),
-    via ``mapInPandas``. Undecodable payloads yield a null row."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = decode_image(p)
-                except (ValueError, NotImplementedError, TypeError):
-                    rows.append((int(mid), None, None, None, None, None, None))
-                    continue
-                scaled = img.astype(np.float64) / 255.0
-                means = scaled.mean(axis=(0, 1))
-                thumb = resize_nearest(scaled.mean(axis=2), thumb_h, thumb_w)
-                rows.append(
-                    (
-                        int(mid),
-                        img.shape[1],
-                        img.shape[0],
-                        float(means[0]),
-                        float(means[1]),
-                        float(means[2]),
-                        [float(x) for x in thumb.reshape(-1)],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height",
-                    "mean_r", "mean_g", "mean_b", "thumb",
-                ],
-            )
-
-    return media.filter(F.col("kind") == "image").select(
-        "media_id", "payload"
-    ).mapInPandas(
-        run,
-        "media_id long, width int, height int, mean_r double, "
-        "mean_g double, mean_b double, thumb array<double>",
-    )
-
-
-def video_frame_features(media: DataFrame, max_frames: int = 8) -> DataFrame:
-    """REAL per-frame video decode where the engine owns the codec chain:
-    MJPEG-AVI (RIFF walk → per-frame built-in JPEG decode,
-    ``functions/avi.py``) and animated GIF (``functions/gif.py``) emit
-    one row per decoded frame (frame_idx, dims, channel means); mp4
-    payloads — whose frame entropy coding stays the declared stub —
-    yield a single typed null row per video, same contract as
-    ``image_features`` for undecodable images.
-
-    Scale shape: frames of one video decode inside one task (the Arrow
-    batch holds the payload once); fan-out beyond ``max_frames`` is the
-    ``frame_sample_plan`` explode + an explicit repartition, exactly as
-    that operator documents."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.avi import decode_avi_frames
-        from ..functions.gif import decode_gif_frames
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = None
-                try:
-                    if payload[:4] == b"RIFF":
-                        frames = decode_avi_frames(payload)
-                    elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                        frames = (f for _, _, f in decode_gif_frames(payload))
-                except (ValueError, struct.error, TypeError):
-                    frames = None
-                if frames is None:
-                    rows.append((int(mid), None, None, None, None, None, None))
-                    continue
-                emitted = False
-                try:
-                    for i, fr in enumerate(frames):
-                        if i >= max_frames:
-                            break
-                        m = fr.astype(np.float64).mean(axis=(0, 1)) / 255.0
-                        rows.append(
-                            (int(mid), i, fr.shape[0], fr.shape[1],
-                             float(m[0]), float(m[1]), float(m[2]))
-                        )
-                        emitted = True
-                except ValueError:
-                    pass
-                if not emitted:
-                    rows.append((int(mid), None, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "height", "width",
-                         "mean_r", "mean_g", "mean_b"],
-            )
-
-    return media.filter(F.col("kind") == "video").select(
-        "media_id", "payload"
-    ).mapInPandas(
-        run,
-        "media_id long, frame_idx int, height int, width int, "
-        "mean_r double, mean_g double, mean_b double",
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (media_id, frame_ts_ms) —
-    pure Catalyst sequence/explode; the actual frame decode is the stub
-    above. Demonstrates the explode-then-decode partitioning shape: frames
-    of one video stay in one partition until an explicit repartition."""
-    vids = media.filter(F.col("kind") == "video").filter(
-        F.col("duration_ms").isNotNull()
-    )
-    return vids.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("duration_ms") - 1, F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Typed-metadata projection + aggregation (no payload read: Catalyst
-    prunes the binary column out of the scan — verify via explain())."""
-    return (
-        media.groupBy("kind")
-        .agg(
-            F.count("*").alias("n"),
-            F.avg("duration_ms").alias("avg_duration_ms"),
-            F.max("width").alias("max_width"),
-        )
-        .orderBy("kind")
-    )
-
-
 def media_bytes_stats(spark, sf_dir: str) -> DataFrame:
     """Oracle-checked multimodal-column query: treat each document's utf-8
     bytes as an opaque binary payload (the media analog over real testdata),
     tag a deterministic kind, and aggregate typed metadata per kind —
-    count, total/max payload bytes. The binary column itself is only
-    length-inspected (metadata-style scan); the decode path stays in
-    ``extract_features``/``_decode_stub``."""
+    count, total/max payload bytes. The payload is only length-inspected;
+    nothing decodes it."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),

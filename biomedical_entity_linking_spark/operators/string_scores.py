@@ -107,10 +107,15 @@ def pair_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The ASCII whitespace Python's ``str.split()`` splits on (the token-set
+# kernel's tokenizer, ``functions/strings.py::_token_set``), as an RE2 class.
+_PY_WHITESPACE_RUN = r"[ \t\n\r\x0b\x0c\x1c-\x1f]+"
+
 # DuckDB's jaro_winkler_similarity / levenshtein are independent
 # implementations of the same public definitions; the token-set
-# normalization (split → distinct → sort → rejoin) is mirrored
-# relationally. NULL never arises (text is non-null in the corpus).
+# normalization (split on whitespace runs, drop empty tokens → distinct →
+# sort → rejoin) is mirrored relationally. NULL never arises (text is
+# non-null in the corpus).
 PAIR_SCORES_SQL = f"""
 WITH t AS (
   SELECT doc_id,
@@ -127,10 +132,12 @@ p AS (
 ),
 n AS (
   SELECT doc_a, doc_b, ta, tb,
-         array_to_string(
-           list_sort(list_distinct(string_split(ta, ' '))), ' ') AS sa,
-         array_to_string(
-           list_sort(list_distinct(string_split(tb, ' '))), ' ') AS sb
+         array_to_string(list_sort(list_distinct(list_filter(
+           regexp_split_to_array(ta, '{_PY_WHITESPACE_RUN}'), x -> x <> ''))),
+           ' ') AS sa,
+         array_to_string(list_sort(list_distinct(list_filter(
+           regexp_split_to_array(tb, '{_PY_WHITESPACE_RUN}'), x -> x <> ''))),
+           ' ') AS sb
   FROM p
 )
 SELECT doc_a, doc_b,

@@ -1,5 +1,5 @@
 """GIF codec (functions/gif.py): LZW + container roundtrips, interlace,
-animation, malformed-input behavior, and decode_image dispatch."""
+animation and malformed-input behavior."""
 
 import numpy as np
 import pytest
@@ -10,10 +10,6 @@ from biomedical_entity_linking_spark.functions.gif import (
     decode_gif,
     decode_gif_frames,
     encode_gif,
-)
-from biomedical_entity_linking_spark.operators.multimodal import (
-    decode_image,
-    sniff_image_format,
 )
 
 
@@ -78,91 +74,3 @@ def test_malformed_inputs_raise():
     big = np.stack([k >> 8, k & 255, np.zeros_like(k)], axis=-1)
     with pytest.raises(ValueError, match="256"):
         encode_gif(big.reshape(32, 32, 3).astype(np.uint8))
-
-
-def test_decode_image_dispatch_gif():
-    rng = np.random.RandomState(5)
-    pal = rng.randint(0, 256, size=(32, 3), dtype=np.uint8)
-    img = pal[rng.randint(0, 32, size=(10, 6))]
-    payload = encode_gif(img)
-    assert sniff_image_format(payload) == "gif"
-    assert (decode_image(payload) == img).all()
-
-
-def test_image_features_over_gif_payloads(spark):
-    """The Spark-side plumbing: gif payloads flow through the real
-    decode path of the image_features operator (no stub)."""
-    from biomedical_entity_linking_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        image_features,
-    )
-
-    rng = np.random.RandomState(7)
-    rows = []
-    for i in range(6):
-        pal = rng.randint(0, 256, size=(8, 3), dtype=np.uint8)
-        img = pal[rng.randint(0, 8, size=(5 + i % 3, 4 + i % 2))]
-        rows.append(
-            (
-                i,
-                f"https://cdn.example.com/gif/{i}",
-                "image",
-                encode_gif(img, interlace=bool(i % 2)),
-                None,
-                None,
-                None,
-            )
-        )
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = image_features(media).collect()
-    assert len(out) == 6
-    for r in out:
-        # a stub/undecodable payload would yield an all-null row
-        assert r.height in (5, 6, 7) and r.width in (4, 5)
-        assert r.mean_r is not None and len(r.thumb) == 8
-
-
-def test_video_frame_features_mjpeg_avi_and_gif(spark):
-    """Frame decode is REAL for MJPEG-AVI and animated GIF; mp4 yields
-    the typed null row (declared stub boundary)."""
-    import numpy as np
-
-    from biomedical_entity_linking_spark.functions.avi import (
-        encode_avi_mjpeg,
-    )
-    from biomedical_entity_linking_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_mp4_skeleton,
-        video_frame_features,
-        video_metadata,
-    )
-
-    yy, xx = np.mgrid[0:16, 0:24]
-    frames = []
-    for t in range(3):
-        img = 128 + 90 * np.sin(xx / 6.0 + t)
-        frames.append(
-            np.clip(np.stack([img, img, img], -1), 0, 255).astype(np.uint8)
-        )
-    rng = np.random.RandomState(2)
-    pal = rng.randint(0, 256, size=(8, 3), dtype=np.uint8)
-    g0 = pal[rng.randint(0, 8, size=(6, 6))]
-    g1 = pal[rng.randint(0, 8, size=(6, 6))]
-    rows = [
-        (0, "u0", "video", encode_avi_mjpeg(frames, fps=5), None, None, None),
-        (1, "u1", "video", encode_gif(g0, extra_frames=[g1]), None, None, None),
-        (2, "u2", "video", encode_mp4_skeleton(2000, 320, 240), None, None, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = video_frame_features(media).collect()
-    by = {}
-    for r in out:
-        by.setdefault(r.media_id, []).append(r)
-    assert len(by[0]) == 3 and all(r.height == 16 and r.width == 24 for r in by[0])
-    assert [r.frame_idx for r in sorted(by[0], key=lambda r: r.frame_idx)] == [0, 1, 2]
-    assert len(by[1]) == 2 and all(r.height == 6 for r in by[1])
-    assert len(by[2]) == 1 and by[2][0].frame_idx is None  # mp4 stub row
-    # and the metadata operator parses the AVI container for real
-    meta = {r.media_id: r for r in video_metadata(media).collect()}
-    assert meta[0].duration_ms == 600 and meta[0].width == 24
-    assert meta[2].duration_ms == 2000  # mp4 metadata path unchanged

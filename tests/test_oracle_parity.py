@@ -63,6 +63,7 @@ FAST_QUERIES = [
     "token_cms_registers",
     "benchmark_bloom_bits",
     "length_histogram",
+    "media_bytes_stats",
 ]
 
 
@@ -94,6 +95,12 @@ def test_query_matches_oracle(spark, con, name):
     assert list(sdf.columns) == list(odf.columns)
     assert len(sdf) == len(odf)
     pd.testing.assert_frame_equal(sdf, odf, check_dtype=False)
+
+
+def test_registry_size():
+    names, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    assert (len(names), len(oracles)) == (91, 90)
+    assert set(names) - set(oracles) == {"er_clusters"}
 
 
 def test_entry_smoke(spark):

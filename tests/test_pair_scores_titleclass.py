@@ -8,12 +8,14 @@ the pin is the naive shape: score every doc pair directly with the same
 production UDF and require identical rows. Kernel VALUE semantics are
 certified separately (5k-pair cross-engine bit-identity + DuckDB parity)."""
 
+import duckdb
 from pyspark.sql import functions as F
 
 from biomedical_entity_linking_spark.operators.scoring import (
     score_components_udf,
 )
 from biomedical_entity_linking_spark.operators.string_scores import (
+    PAIR_SCORES_SQL,
     pair_scores,
 )
 
@@ -32,10 +34,24 @@ _TEXTS = [
 ]
 
 
-def _write_docs(spark, tmp_path):
+# titles split on ' ' alone keep tabs/newlines inside tokens and yield
+# empty tokens at leading, trailing and doubled spaces; the token-set
+# kernel (str.split()) sees none of that, and the oracle must agree
+_WS_TEXTS = [
+    "red fox alpha\nbeta gamma",    # 0  same token set as 1
+    "red fox alpha beta gamma",     # 1
+    "red fox  alpha\tbeta delta",   # 2  doubled space
+    "red fox gamma ",               # 3  trailing space
+    " blue owl mu\r\nnu xi",        # 4  leading space
+    " blue owl mu nu\x0bxi\x0cpi",  # 5  leading space, VT/FF
+    " blue owl\t\x1fmu nu",         # 6  leading space, tab/US
+]
+
+
+def _write_docs(spark, tmp_path, texts=_TEXTS):
     path = str(tmp_path / "corpus")
     spark.createDataFrame(
-        [(i, t) for i, t in enumerate(_TEXTS)], "doc_id long, text string"
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     ).write.parquet(f"{path}/documents.parquet")
     return path
 
@@ -79,3 +95,18 @@ def test_titleclass_rows_match_naive_per_pair_scoring(spark, tmp_path):
     # identical-title pairs score (1.0, 1.0) — the duplicate-class rows
     perfect = {(a, b) for a, b, jw, ts in got if jw == 1.0 and ts == 1.0}
     assert {(0, 1), (0, 2), (1, 2), (5, 6)} <= perfect
+
+
+def test_whitespace_tokenization_matches_oracle(spark, tmp_path):
+    sf = _write_docs(spark, tmp_path, _WS_TEXTS)
+    got = [tuple(r) for r in pair_scores(spark, sf).collect()]
+    with duckdb.connect() as con:
+        con.execute(
+            "CREATE VIEW documents AS "
+            f"SELECT * FROM '{sf}/documents.parquet/*.parquet'"
+        )
+        want = [tuple(r) for r in con.execute(PAIR_SCORES_SQL).fetchall()]
+    assert len(got) == 6 + 3
+    assert got == want
+    # 0 and 1 differ only in whitespace: identical token sets
+    assert {(a, b): ts for a, b, jw, ts in got}[(0, 1)] == 1.0

@@ -1,51 +1,48 @@
 """Focused test for the r6 embedding_neardup hot-loop rewrite
-(OPTIMIZATION_r06.md): the unrolled 64-term sum ``((0.0+p1)+p2)+...``
-must perform the IDENTICAL IEEE-754 operation sequence as the
-``aggregate``/``zip_with`` left fold it replaced — bit-identical doubles,
-not approximately-equal ones — because the query's cosine threshold and
-the DuckDB oracle hash are exact. Exercised on adversarial magnitudes
-(mixed signs, exponents spanning 1e-30..1e30) where any reassociation
-WOULD change the result."""
+(OPTIMIZATION_r06.md): the shipped dot expression
+(``dedup._neardup_dot``) must perform the IDENTICAL IEEE-754 operation
+sequence as the left fold ``((0.0 + a1*b1) + a2*b2) + ...`` — bit-identical
+doubles, not approximately-equal ones — because the query's cosine
+threshold and the DuckDB oracle hash are exact. 64-dim rows take the
+unrolled branch, other dimensions the size-guarded HOF fallback; both are
+checked against a pure-Python fold on adversarial magnitudes (mixed signs,
+exponents spanning 1e-30..1e30) where any reassociation WOULD change the
+result."""
 
 import random
 import struct
 
-from pyspark.sql import functions as F
-
-_DIM = 64
-
-
-def _hof_dot():
-    return F.aggregate(
-        F.zip_with(F.col("pv"), F.col("v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _unrolled_dot():
-    out = F.lit(0.0)
-    for i in range(1, _DIM + 1):
-        out = out + (F.element_at(F.col("pv"), i) * F.element_at(F.col("v"), i))
-    return out
+from biomedical_entity_linking_spark.operators.dedup import _neardup_dot
 
 
 def _bits(x: float) -> int:
     return struct.unpack("<Q", struct.pack("<d", x))[0]
 
 
+def _fold(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
 def test_unrolled_matches_hof_bitwise(spark):
     rng = random.Random(1234)
 
-    def vec():
+    def vec(dim):
         return [
             rng.choice([-1.0, 1.0]) * rng.random() * 10 ** rng.randint(-30, 30)
-            for _ in range(_DIM)
+            for _ in range(dim)
         ]
 
-    rows = [(vec(), vec()) for _ in range(200)]
-    df = spark.createDataFrame(
-        rows, "pv array<double>, v array<double>"
-    ).select(_hof_dot().alias("h"), _unrolled_dot().alias("u"))
-    for r in df.collect():
-        assert _bits(r["h"]) == _bits(r["u"]), (r["h"], r["u"])
+    dims = [64] * 200 + [3, 100]
+    rows = [(vec(d), vec(d)) for d in dims]
+    got = (
+        spark.createDataFrame(rows, "pv array<double>, v array<double>")
+        .select("pv", "v", _neardup_dot("pv", "v").alias("d"))
+        .collect()
+    )
+    assert sorted(len(r["pv"]) for r in got) == sorted(dims)
+    for r in got:
+        want = _fold(r["pv"], r["v"])
+        assert _bits(r["d"]) == _bits(want), (len(r["pv"]), r["d"], want)

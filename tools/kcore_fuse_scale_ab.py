@@ -1,8 +1,8 @@
 """Same-window A/B at 10M docs for the kcore checkpoint fusion: EAGER
-per-round edge checkpoint (r5 shape) vs LAZY (shipped r6 session-2 shape),
-alternating fresh-JVM legs so both variants share the window's noise —
-the r5 pinned campaign and the r6 fused campaign ran on different days,
-so their efficiency numbers are not directly comparable.
+per-round edge checkpoint (r5 shape) vs LAZY (measured and rejected in r6
+session 2), alternating fresh-JVM legs so both variants share the window's
+noise — the r5 pinned campaign and the r6 fused campaign ran on different
+days, so their efficiency numbers are not directly comparable.
 
 Uses the cached id-dense corpus from ``kcore_scale_bench._id_docs_dir``.
 Legs: 8-core x3 each + 2-core x2 each (env-overridable), alternating
