@@ -226,11 +226,3 @@ def exclude_vertices(
         .join(bl, edges[dst] == F.col("_x"), "left_anti")
     )
 
-
-def attach_singletons(labels: DataFrame, records: DataFrame, url_col: str = "url") -> DataFrame:
-    """Give unmatched records their own singleton component (their url)."""
-    return (
-        records.select(F.col(url_col).alias("url"))
-        .join(labels, "url", "left")
-        .select("url", F.coalesce("component", "url").alias("component"))
-    )

@@ -8,9 +8,8 @@ inter-arrival) into the three canonical composites:
 
 * ``event_sessions`` — gap-threshold sessionization: a session breaks
   where the inter-event gap exceeds 30 minutes; session ids are the
-  running sum of break flags over the per-user time order (the batch
-  twin of ``streaming.crawl_sessions``' stateful operator — same
-  semantics, no state, one window);
+  running sum of break flags over the per-user time order (no state,
+  one window);
 * ``funnel_conversion`` — STRICT-ORDER funnel (view → click →
   purchase): a click counts only after the user's first view, a
   purchase only after that first qualifying click. Stage timestamps

@@ -506,14 +506,6 @@ PROTO_TOPK_SQL = _switched_sql(
     _BX_PROTO_RANKED_CTE, _ix_ranked_cte(proto=True), TOP_K
 )
 
-# exact-only oracle (for exact_cosine_topk / the evaluation-metric CTEs)
-EXACT_COSINE_TOPK_SQL = f"""
-WITH {_BX_RANKED_CTE.strip()}
-SELECT vec_id, neighbor_id, CAST(rank AS INT) AS rank
-FROM bx_ranked WHERE rank <= {TOP_K}
-ORDER BY vec_id, rank
-"""
-
 IVF_TOPK_SQL = f"""
 WITH {_ix_ranked_cte(proto=False).strip()}
 SELECT vec_id, neighbor_id, CAST(rank AS INT) AS rank

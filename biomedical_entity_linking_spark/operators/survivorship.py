@@ -4,8 +4,9 @@ Once ER has grouped duplicate pages into clusters (``er_clusters``,
 ``neardup_clusters``, ``incremental_linkage``), a deployment must emit
 ONE canonical record per cluster with per-field survivorship rules —
 the master-data step the reference performs when it picks a canonical
-name per CUI by source rank (``sources/readers.py`` MRRANK ``-rank+850``
-argmin readoff; ``bigbio_utils.py`` canonical-name resolution). This
+name per CUI by source rank (MRRANK ``rank = -rank + 850`` argmin
+readoff, ``bioel/bioel/utils/umls_utils.py:160-166``; ``bigbio_utils.py``
+canonical-name resolution). This
 operator is the web-tier version, four classic rule families in one
 pass:
 

@@ -516,8 +516,7 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
                 "MapInPandas"],
     )
     add(
-        "event_sessions (gap-threshold sessionization, batch twin of the "
-        "streaming stateful op)",
+        "event_sessions (gap-threshold sessionization, one stateless window)",
         E.queries()["event_sessions"](spark, sf_dir),
         # one user_id hash shuffle feeds the lag window, the running-sum
         # window, and the per-session aggregate

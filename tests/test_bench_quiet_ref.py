@@ -45,3 +45,17 @@ def test_quiet_ref_is_min_across_sources():
     for name, sec in r4.items():
         if name in doc["queries"]:
             assert doc["queries"][name] <= sec + 1e-9
+    # the committed refs are exactly the per-query min over the listed
+    # sources (driver artifacts at the root, extra runs under tools/)
+    from tools.build_quiet_ref import _queries_from
+
+    ref: dict[str, float] = {}
+    for src in doc["sources"]:
+        path = os.path.join(ROOT, src)
+        if not os.path.exists(path):
+            path = os.path.join(ROOT, "tools", src)
+        qs = _queries_from(path)
+        assert qs, f"source {src} holds no bench run"
+        for name, sec in qs.items():
+            ref[name] = min(sec, ref.get(name, sec))
+    assert ref == doc["queries"]

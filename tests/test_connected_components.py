@@ -7,7 +7,6 @@ import numpy as np
 import pytest
 
 from biomedical_entity_linking_spark.operators.connected_components import (
-    attach_singletons,
     connected_components,
 )
 
@@ -79,13 +78,22 @@ def test_empty_edges(spark):
     assert labels.count() == 0
 
 
-def test_attach_singletons(spark):
-    edges = spark.createDataFrame([("a", "b")], ["url_a", "url_b"])
-    labels, _ = connected_components(edges)
-    records = spark.createDataFrame([("a",), ("b",), ("c",)], ["url"])
-    full = attach_singletons(labels, records)
-    got = {r["url"]: r["component"] for r in full.collect()}
-    assert got == {"a": "a", "b": "a", "c": "c"}
+def test_exclude_vertices_anti_join(spark):
+    """P11: edges touching blocklisted vertices are dropped
+    (special_partition.pyx:373-375)."""
+    from biomedical_entity_linking_spark.operators.connected_components import (
+        exclude_vertices,
+    )
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")],
+        "url_a string, url_b string",
+    )
+    bl = spark.createDataFrame([("b",)], "url string")
+    kept = sorted(
+        (r["url_a"], r["url_b"]) for r in exclude_vertices(edges, bl).collect()
+    )
+    assert kept == [("c", "d"), ("d", "e")]
 
 
 def test_nonconvergence_guard(spark):
