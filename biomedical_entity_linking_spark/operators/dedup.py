@@ -74,8 +74,8 @@ def _shingle_relation(docs: DataFrame) -> DataFrame:
     32-char hex strings — ~4× less shuffle payload on the relation
     that dominates the near-dup family's runtime (measured: the edges
     phase is 99% of neardup_clusters at 1M docs,
-    `tools/neardup_decomp_r5.log`). Cross-engine portable: DuckDB runs
-    the identical ``('0x' || substr(md5(..),1,15))::BIGINT``. 60-bit
+    `tools/neardup_decomp_r5.log` at commit `0d9120d`). Cross-engine
+    portable: DuckDB runs the identical ``('0x' || substr(md5(..),1,15))::BIGINT``. 60-bit
     keys over a crawl shard's ~10^8 shingles collide with probability
     ~1e-2 per shard (birthday), merging two shingles — noise far below
     the MinHash/df-cap approximation the family already carries.

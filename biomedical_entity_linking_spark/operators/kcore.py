@@ -40,8 +40,8 @@ checkpointed degree-MARKED relation; peeled and surviving vertices are
 then FILTERS of it, not joins (the naive peel pays an extra per-round
 anti-join and two extra checkpoint barriers — together with pinning,
 measured 309 s → 156 s at 8 cores / 10M docs,
-``tools/kcore_campaign_r5_naive.log`` vs ``_pinned2.log``). Two
-semi-joins shrink the edge relation. Both per-round checkpoints are
+``tools/kcore_campaign_r5_naive.log`` vs ``_pinned2.log`` at commit
+``0d9120d``). Two semi-joins shrink the edge relation. Both per-round checkpoints are
 ``repartition``-pinned on
 their join keys (the ``pagerank`` v2 move: an explicit-N repartition
 survives the ``localCheckpoint`` as the LogicalRDD's partitioning, so
@@ -183,11 +183,11 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         # A LAZY edge checkpoint (eager=False, materializing inside the
         # next round's marked job — one barrier per round) was also
         # measured and REJECTED: marginal at sf0.1 (~-0.5 s first shot,
-        # tools/kcore_fuse_probe.py) but slower at 10M docs in a
-        # same-window A/B (min @8: 116 s eager vs 133 s fused, worst
-        # fused leg 237 s; min @2: 284 vs 306 s —
-        # tools/kcore_fuse_ab_r6.log): the degree count references the
-        # edge relation twice (a-leg + b-leg), and without an eager
+        # tools/kcore_fuse_probe.py at commit 0d9120d) but slower at 10M
+        # docs in a same-window A/B (min @8: 116 s eager vs 133 s fused,
+        # worst fused leg 237 s; min @2: 284 vs 306 s —
+        # tools/kcore_fuse_ab_r6.log at commit 0d9120d): the degree count
+        # references the edge relation twice (a-leg + b-leg), and without an eager
         # materialization the semi-join update recomputes under each
         # reference at scale. The eager checkpoint stays.
         und = (

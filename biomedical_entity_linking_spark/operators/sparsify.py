@@ -187,13 +187,14 @@ def greedy_entity_partition(
     component in memory, and kept edges never cross original components,
     so a per-task union-find over the kept edges IS the post-sparsify
     connected components. Measured head-to-head
-    (``tools/sparsify_mode_bench.py``, 3M edges / 1M components, one
-    window): plain kernel 204.8 s + second CC 8.9 s vs labels kernel
-    285.8 s — the sparsified graph is forest-like, its CC converges in 1
-    round, and the label-emitting kernel pays ~40% extra per-group
-    Python, so the flagship keeps the plain-kernel + CC path. This mode
-    remains for consumers whose sparsified graphs are NOT cheap to
-    re-label (many CC rounds), where skipping the fixed point wins.
+    (``tools/sparsify_mode_bench.py`` at commit ``0d9120d``, 3M edges /
+    1M components, one window): plain kernel 204.8 s + second CC 8.9 s
+    vs labels kernel 285.8 s — the sparsified graph is forest-like, its
+    CC converges in 1 round, and the label-emitting kernel pays ~40%
+    extra per-group Python, so the flagship keeps the plain-kernel + CC
+    path. This mode remains for consumers whose sparsified graphs are NOT
+    cheap to re-label (many CC rounds), where skipping the fixed point
+    wins.
 
     ``entity_nodes``: one-column DataFrame of entity node ids (same id
     space as src/dst). Components without any entity keep their spanning

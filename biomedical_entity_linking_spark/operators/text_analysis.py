@@ -494,7 +494,7 @@ def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     web vocabularies (this corpus: 154M tokens, 33.5M DISTINCT — urls,
     numbers, typos). Two measured facts drive the shape (1M docs,
     isolated-JVM legs; raw logs ``tools/trainmix_campaign_r5_vocab.log``
-    and ``tools/vocab_decompose_r5.log``):
+    and ``tools/vocab_decompose_r5.log``, at commit ``0d9120d``):
 
     * a vanilla ``groupBy(hash)`` puts an UNBOUNDED map-side combine map
       (~6M entries/task) in every task; with a generous heap nothing

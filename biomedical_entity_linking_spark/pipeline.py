@@ -64,6 +64,11 @@ class PipelineConfig:
     vertex_blocklist_fp: int | None = None
     entity_urls_fp: int | None = None
 
+    def __post_init__(self) -> None:
+        # fail at the API edge, before any stage starts a Spark job
+        if self.sparsifier not in ("threshold_cc", "greedy_exact"):
+            raise ValueError(f"unknown sparsifier: {self.sparsifier!r}")
+
     def fingerprint(self, stage: str) -> str:
         payload = json.dumps(
             {"stage": stage, **{k: v for k, v in asdict(self).items() if k != "work_dir"}},
@@ -395,11 +400,11 @@ def run_pipeline(
         # its spanning forest (connectivity — and therefore the clusters —
         # unchanged vs threshold_cc). The post-sparsify components come
         # from the ordinary CC below: measured head-to-head
-        # (tools/sparsify_mode_bench.py), CC over the sparsified graph
-        # costs ~9 s/3M edges (forest-like → 1 iteration) while the
-        # labels-emitting kernel variant costs +40% — so the kernel-label
-        # shortcut (greedy_entity_partition(return_labels=True)) stays an
-        # operator option, not the pipeline default.
+        # (tools/sparsify_mode_bench.py, at commit 0d9120d), CC over the
+        # sparsified graph costs ~9 s/3M edges (forest-like → 1 iteration)
+        # while the labels-emitting kernel variant costs +40% — so the
+        # kernel-label shortcut (greedy_entity_partition(return_labels=True))
+        # stays an operator option, not the pipeline default.
         from .operators.sparsify import greedy_entity_partition
 
         ent_rids = (
@@ -408,8 +413,6 @@ def run_pipeline(
             else spark.createDataFrame([], "rid long")
         )
         edges = greedy_entity_partition(edges, ent_rids)
-    elif cfg.sparsifier != "threshold_cc":
-        raise ValueError(f"unknown sparsifier: {cfg.sparsifier!r}")
 
     cc_meta: dict = {}
 

@@ -54,14 +54,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # Local-mode shuffle goes through one shared disk — a sandbox artifact
-    # (real executors have their own disks). SPARK_LINKAGE_TMPFS=1 points
-    # shuffle spill at tmpfs so the two-parallelism scaling measurement
-    # isn't capped by single-disk bandwidth.
-    if os.environ.get("SPARK_LINKAGE_TMPFS") == "1":
-        local_dir = "/dev/shm/spark-linkage-local"
-        os.makedirs(local_dir, exist_ok=True)
-        builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

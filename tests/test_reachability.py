@@ -1,6 +1,7 @@
-"""Package reachability: every engine module is imported, directly or
+"""Reachability: every engine module is imported, directly or
 transitively, by a registered query, the pipeline, ``bench.py`` or the
-benchmark in ``perfbench/`` — or it is on an explicit allowlist with a
+benchmark in ``perfbench/``; every ``tools/*.py`` script is reached from
+those roots or from a test — or it is on an explicit allowlist with a
 reason. New dead code then fails here instead of waiting for a review.
 
 The walk is static (stdlib ``ast``): it follows absolute and relative
@@ -19,12 +20,18 @@ PKG = "biomedical_entity_linking_spark"
 # package modules (dotted, relative to PKG) that no root reaches, and why
 # each one stays anyway
 ALLOWED_UNREACHED = {
-    "functions.gif": "standalone GIF codec; its deletion is pending on "
-                     "ROADMAP direction 4 (media stack)",
     "functions.salting": "documented hot-key escape hatch that operator "
                          "docstrings cite",
     "plans.report": "EXPLAIN audit tooling (writes EXPLAIN.md)",
     "plans.staging_lint": "EXPLAIN audit tooling (expression-staging lint)",
+}
+
+# tools/ scripts (file stems) that neither those roots nor any test
+# imports, and why each one stays anyway
+TOOLS_ALLOWED_UNREACHED = {
+    "bench_extra": "per-query repeat timer (min of N in one session)",
+    "submit_flagship": "spark-submit app that submit_scaling stages by "
+                       "file path, not by import",
 }
 
 
@@ -77,9 +84,9 @@ def _imports(path: Path) -> set[Path]:
     return found
 
 
-def reachable() -> set[Path]:
+def reachable(roots: list[Path]) -> set[Path]:
     seen: set[Path] = set()
-    todo = _roots()
+    todo = list(roots)
     while todo:
         path = todo.pop()
         if path in seen:
@@ -90,7 +97,7 @@ def reachable() -> set[Path]:
 
 
 def unreached_package_modules() -> set[str]:
-    seen = reachable()
+    seen = reachable(_roots())
     out = set()
     for path in (REPO / PKG).rglob("*.py"):
         if path in seen or path.name == "__init__.py":
@@ -105,4 +112,16 @@ def test_unreached_modules_equal_allowlist():
         f"unreached but not allowlisted: {sorted(unreached - set(ALLOWED_UNREACHED))}; "
         f"allowlisted but now reached or gone: "
         f"{sorted(set(ALLOWED_UNREACHED) - unreached)}"
+    )
+
+
+def test_tools_scripts_reached_or_listed():
+    seen = reachable(_roots() + sorted((REPO / "tests").glob("*.py")))
+    unreached = {p.stem for p in (REPO / "tools").glob("*.py")
+                 if p not in seen}
+    assert unreached == set(TOOLS_ALLOWED_UNREACHED), (
+        f"unreached but not allowlisted: "
+        f"{sorted(unreached - set(TOOLS_ALLOWED_UNREACHED))}; "
+        f"allowlisted but now reached or gone: "
+        f"{sorted(set(TOOLS_ALLOWED_UNREACHED) - unreached)}"
     )

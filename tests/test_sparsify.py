@@ -123,6 +123,15 @@ def test_pipeline_exact_mode_equals_threshold_cc_without_entities(
     assert cc == gx
 
 
+def test_unknown_sparsifier_rejected_at_config(tmp_path):
+    """A typo fails when the config is built — Spark-free — not after the
+    extract/pairs/features/score stages have run and committed."""
+    from biomedical_entity_linking_spark.pipeline import PipelineConfig
+
+    with pytest.raises(ValueError, match="unknown sparsifier: 'bogus'"):
+        PipelineConfig(work_dir=str(tmp_path), sparsifier="bogus")
+
+
 def test_pipeline_exact_mode_splits_on_entities(spark, tmp_path):
     """With entity pages marked, the exact mode partitions a merged
     component so each side anchors on its own entity."""

@@ -3,7 +3,7 @@
 a complete, self-sufficient import source for the engine — every module,
 no checkout on sys.path. Hermetic (no Spark session): zip construction +
 import resolution only; the end-to-end submit run is
-``tools/submit_campaign_r5.log``.
+``tools/submit_campaign_r5.log`` at commit ``0d9120d``.
 """
 
 from __future__ import annotations

@@ -3,8 +3,8 @@
 standing in for N and 4N executors — no real cluster in the sandbox),
 reporting throughput at both plus scaling efficiency.
 
-What this proves beyond ``tools/scaling_bench.py`` (same job, in-process
-sessions): the engine deploys the way the north rule says it must —
+What this proves beyond an in-process session running the same job: the
+engine deploys the way the north rule says it must —
 packaged as a zip, shipped with ``--py-files``, session built
 master-agnostically from submit-time conf. spark-submit runs from a
 NEUTRAL cwd (the work dir, not the checkout), so the
@@ -50,11 +50,24 @@ def build_zip(out_path: str) -> str:
 
 
 def gen_pages(n_entities: int) -> str:
-    """Reuse scaling_bench's cached corpus (same path scheme/seed)."""
+    """Generate the seeded pages corpus once and cache it as parquet under
+    ``/tmp/spark_linkage_scaling`` (reused by later runs of the same size)."""
     sys.path.insert(0, ROOT)
-    from tools.scaling_bench import _gen_pages  # noqa: PLC0415
+    from biomedical_entity_linking_spark.data.generator import (  # noqa: PLC0415
+        generate_pages_distributed,
+    )
+    from biomedical_entity_linking_spark.session import get_spark  # noqa: PLC0415
 
-    return _gen_pages(n_entities)
+    path = f"/tmp/spark_linkage_scaling/pages_{n_entities}_b150_seed42"
+    if not os.path.exists(path + "._OK"):
+        spark = get_spark(app_name="scaling-gen", cores=32)
+        pages, _ = generate_pages_distributed(
+            spark, n_entities, seed=42, body_tokens=150, partitions=128
+        )
+        pages.write.mode("overwrite").parquet(path)
+        open(path + "._OK", "w").write("ok")
+        spark.stop()
+    return path
 
 
 def main() -> None:
