@@ -39,33 +39,15 @@ def _clean_fragment(raw: bytes) -> str:
     return _WS_RE.sub(" ", s).strip()
 
 
-def _extract_one(html: bytes | None) -> str:
+def _extract_one(html: bytes | None) -> tuple[str, str]:
+    """html → (``title + "\\n" + body``, title): the extraction kernel."""
     if html is None:
-        return ""
+        return "", ""
     t = _TITLE_RE.search(html)
     b = _BODY_RE.search(html)
     title = _clean_fragment(t.group(1)) if t else ""
     body = _clean_fragment(b.group(1)) if b else ""
-    return title + "\n" + body
-
-
-@F.pandas_udf(StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    """html binary → extracted text (byte-identical contract per url)."""
-    return html.map(_extract_one)
-
-
-@F.pandas_udf(StringType())
-def extract_title(html: pd.Series) -> pd.Series:
-    """html binary → cleaned <title> text only (the blocking/scoring field)."""
-
-    def one(h: bytes | None) -> str:
-        if h is None:
-            return ""
-        m = _TITLE_RE.search(h)
-        return _clean_fragment(m.group(1)) if m else ""
-
-    return html.map(one)
+    return title + "\n" + body, title
 
 
 _EXTRACT_SCHEMA = StructType(
@@ -80,20 +62,11 @@ _EXTRACT_SCHEMA = StructType(
 def _extract_text_title(html: pd.Series) -> pd.DataFrame:
     """Fused text+title extraction (r6): the html payload — the widest
     column in the pipeline — crosses the JVM→Python Arrow boundary ONCE
-    and the <title> regex runs once, where the split ``extract_text`` /
-    ``extract_title`` pair shipped every page's bytes twice and searched
-    the title twice (guide-§4 boundary cost; values byte-identical)."""
-
-    def one(h: bytes | None) -> tuple[str, str]:
-        if h is None:
-            return "", ""
-        t = _TITLE_RE.search(h)
-        b = _BODY_RE.search(h)
-        title = _clean_fragment(t.group(1)) if t else ""
-        body = _clean_fragment(b.group(1)) if b else ""
-        return title + "\n" + body, title
-
-    pairs = [one(h) for h in html]
+    and the <title> regex runs once, where the split text-only/title-only
+    UDF pair (``extract.py`` at commit ``7a3d746``) shipped every page's
+    bytes twice and searched the title twice (guide-§4 boundary cost;
+    values byte-identical)."""
+    pairs = [_extract_one(h) for h in html]
     return pd.DataFrame(pairs, columns=["extracted_text", "title"])
 
 

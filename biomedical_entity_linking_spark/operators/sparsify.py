@@ -142,31 +142,6 @@ def _greedy_partition_component(
 # ---------------------------------------------------------------------------
 
 
-def _subcomponent_labels(
-    edges: list[tuple[int, int, float]]
-) -> list[tuple[int, int]]:
-    """(node, min-node-of-its-subcomponent) for every node touched by the
-    kept edges — plain union-find over a single (small) component. Labels
-    are globally unique across kernel tasks because min-node ids are."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent.setdefault(r, r) != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for u, v, _ in edges:
-        parent[find(u)] = find(v)
-    label: dict[int, int] = {}
-    for n in parent:
-        r = find(n)
-        label[r] = min(label.get(r, n), n)
-    return [(n, label[find(n)]) for n in parent]
-
-
 def greedy_entity_partition(
     edges: DataFrame,
     entity_nodes: DataFrame,
@@ -175,26 +150,9 @@ def greedy_entity_partition(
     weight: str = "weight",
     directed: bool = False,
     max_component_edges: int = MAX_COMPONENT_EDGES,
-    return_labels: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Exact-mode sparsifier: reference greedy semantics, parallel across
-    components. Returns the kept edges (same src/dst/weight columns) —
-    or, with ``return_labels=True``, ``(kept_edges, labels)`` where
-    ``labels`` is (node, component) over the KEPT edge graph with the
-    min-member-node as the component label.
-
-    The labels are exact: the greedy kernel already holds each CC-labeled
-    component in memory, and kept edges never cross original components,
-    so a per-task union-find over the kept edges IS the post-sparsify
-    connected components. Measured head-to-head
-    (``tools/sparsify_mode_bench.py`` at commit ``0d9120d``, 3M edges /
-    1M components, one window): plain kernel 204.8 s + second CC 8.9 s
-    vs labels kernel 285.8 s — the sparsified graph is forest-like, its
-    CC converges in 1 round, and the label-emitting kernel pays ~40%
-    extra per-group Python, so the flagship keeps the plain-kernel + CC
-    path. This mode remains for consumers whose sparsified graphs are NOT
-    cheap to re-label (many CC rounds), where skipping the fixed point
-    wins.
+    components. Returns the kept edges (same src/dst/weight columns).
 
     ``entity_nodes``: one-column DataFrame of entity node ids (same id
     space as src/dst). Components without any entity keep their spanning
@@ -260,60 +218,17 @@ def greedy_entity_partition(
                 zip(g["src"].tolist(), g["dst"].tolist(), g["weight"].tolist())
             )
             kept = _greedy_partition_component(triples, ents, directed)
-            if not return_labels:
-                frames.append(
-                    pd.DataFrame(kept, columns=["src", "dst", "weight"])
-                )
-            else:
-                lab = dict(_subcomponent_labels(kept))
-                frames.append(
-                    pd.DataFrame(
-                        [(u, v, w, lab[u]) for u, v, w in kept],
-                        columns=["src", "dst", "weight", "ncomp"],
-                    )
-                )
+            frames.append(pd.DataFrame(kept, columns=["src", "dst", "weight"]))
         if not frames:
-            cols = ["src", "dst", "weight"] + (
-                ["ncomp"] if return_labels else []
-            )
-            return pd.DataFrame(columns=cols)
+            return pd.DataFrame(columns=["src", "dst", "weight"])
         return pd.concat(frames, ignore_index=True)
 
     e = e.withColumn("bucket", F.pmod(F.col("comp"), F.lit(n_buckets)))
-
-    if not return_labels:
-        out = e.groupBy("bucket").applyInPandas(
-            run_bucket, "src long, dst long, weight double"
-        )
-        return out.select(
-            F.col("src").alias(src),
-            F.col("dst").alias(dst),
-            F.col("weight").alias(weight),
-        )
-
-    # labels mode: every kept edge carries its subcomponent label (both
-    # endpoints share it by construction); the label relation is a pure
-    # projection — no distributed CC over the sparsified graph. The kernel
-    # output is checkpointed HERE because labels itself is a two-branch
-    # union over it (src + dst projections) — without materialization the
-    # CC-labeling + greedy chain executes once per branch (measured 2x the
-    # stage at 3.3M pages), and it also makes consuming both returned
-    # frames safe.
     out = e.groupBy("bucket").applyInPandas(
-        run_bucket, "src long, dst long, weight double, ncomp long"
-    ).localCheckpoint(eager=False)
-    kept = out.select(
+        run_bucket, "src long, dst long, weight double"
+    )
+    return out.select(
         F.col("src").alias(src),
         F.col("dst").alias(dst),
         F.col("weight").alias(weight),
     )
-    labels = (
-        out.select(F.col("src").alias("node"), F.col("ncomp").alias("component"))
-        .unionByName(
-            out.select(
-                F.col("dst").alias("node"), F.col("ncomp").alias("component")
-            )
-        )
-        .dropDuplicates(["node"])
-    )
-    return kept, labels

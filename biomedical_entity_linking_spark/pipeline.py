@@ -144,12 +144,20 @@ class StageRunner:
             )
         return out
 
+    def _resume(self, stage: str) -> DataFrame | None:
+        """The checkpoint-backed table (its manifest counters recorded), or
+        None when the stage has no valid checkpoint."""
+        if not self.has_checkpoint(stage):
+            return None
+        _, manifest = self._paths(stage)
+        with open(manifest) as f:
+            self.counters[stage] = json.load(f)["counters"]
+        return self.read(stage)
+
     def run_stage(self, stage: str, fn, extra_fn=None) -> DataFrame:
-        if self.has_checkpoint(stage):
-            _, manifest = self._paths(stage)
-            with open(manifest) as f:
-                self.counters[stage] = json.load(f)["counters"]
-            return self.read(stage)
+        done = self._resume(stage)
+        if done is not None:
+            return done
         import time
 
         t0 = time.time()
@@ -172,12 +180,9 @@ class StageRunner:
         consume NOW; ``finalize()`` joins the writer, records counters, and
         returns the checkpoint-backed DataFrame (callers should expose THAT
         one, then the cache is released)."""
-        if self.has_checkpoint(stage):
-            _, manifest = self._paths(stage)
-            with open(manifest) as f:
-                self.counters[stage] = json.load(f)["counters"]
-            df = self.read(stage)
-            return df, lambda: df
+        done = self._resume(stage)
+        if done is not None:
+            return done, lambda: done
         import threading
         import time
 
@@ -244,40 +249,17 @@ def run_pipeline(
     # be reused across runs with and without side tables)
     from dataclasses import replace
 
+    def _fp(df: DataFrame | None, *cols: str) -> int | None:
+        if df is None:
+            return None
+        fp = df.agg(F.bit_xor(F.xxhash64(*cols)).alias("fp")).first()["fp"]
+        return int(fp or 0)
+
     cfg = replace(
         cfg,
-        norm_rules_fp=(
-            int(
-                norm_rules.agg(
-                    F.bit_xor(
-                        F.xxhash64("domain", "token", "replacement")
-                    ).alias("fp")
-                ).first()["fp"]
-                or 0
-            )
-            if norm_rules is not None
-            else None
-        ),
-        vertex_blocklist_fp=(
-            int(
-                vertex_blocklist.agg(
-                    F.bit_xor(F.xxhash64("url")).alias("fp")
-                ).first()["fp"]
-                or 0
-            )
-            if vertex_blocklist is not None
-            else None
-        ),
-        entity_urls_fp=(
-            int(
-                entity_urls.agg(
-                    F.bit_xor(F.xxhash64("url")).alias("fp")
-                ).first()["fp"]
-                or 0
-            )
-            if entity_urls is not None
-            else None
-        ),
+        norm_rules_fp=_fp(norm_rules, "domain", "token", "replacement"),
+        vertex_blocklist_fp=_fp(vertex_blocklist, "url"),
+        entity_urls_fp=_fp(entity_urls, "url"),
     )
     runner = StageRunner(spark, cfg)
 
@@ -402,9 +384,8 @@ def run_pipeline(
         # from the ordinary CC below: measured head-to-head
         # (tools/sparsify_mode_bench.py, at commit 0d9120d), CC over the
         # sparsified graph costs ~9 s/3M edges (forest-like → 1 iteration)
-        # while the labels-emitting kernel variant costs +40% — so the
-        # kernel-label shortcut (greedy_entity_partition(return_labels=True))
-        # stays an operator option, not the pipeline default.
+        # while having the kernel emit the component labels itself cost
+        # +40% (BENCH.md), so there is no kernel-label shortcut.
         from .operators.sparsify import greedy_entity_partition
 
         ent_rids = (

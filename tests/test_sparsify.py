@@ -240,41 +240,3 @@ class TestGreedyPartitionProperties:
                 comp_seen |= comp
                 assert len(comp & ents) <= 1, (seed, comp)
 
-
-def test_return_labels_equals_cc_over_kept_edges(spark):
-    """The kernel-emitted subcomponent labels must equal connected
-    components over the kept edge graph (min-node labels) — the flagship
-    skips its second CC on the back of this equality."""
-    import numpy as np
-
-    from biomedical_entity_linking_spark.operators.connected_components import (
-        connected_components,
-    )
-    from biomedical_entity_linking_spark.operators.sparsify import (
-        greedy_entity_partition,
-    )
-
-    rng = np.random.RandomState(17)
-    rows = []
-    for comp in range(12):  # several interacting components with cycles
-        base = comp * 100
-        n = 4 + comp % 5
-        for i in range(n):
-            rows.append((base + i, base + (i + 1) % n, float(rng.rand())))
-        rows.append((base, base + n // 2, float(rng.rand())))  # chord
-    edges = spark.createDataFrame(rows, "rid_a long, rid_b long, weight double")
-    ents = spark.createDataFrame(
-        [(c * 100,) for c in range(12)] + [(c * 100 + 2,) for c in range(0, 12, 3)],
-        "rid long",
-    )
-    kept, labels = greedy_entity_partition(edges, ents, return_labels=True)
-    kept = kept.persist()
-    got = {
-        (r["node"], r["component"]) for r in labels.collect()
-    }
-    cc_labels, _ = connected_components(kept, src="rid_a", dst="rid_b")
-    want = {
-        (r["url"], r["component"]) for r in cc_labels.collect()
-    }
-    assert got == want
-    kept.unpersist()

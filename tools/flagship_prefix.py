@@ -50,11 +50,7 @@ def oracle_extract(pages: pd.DataFrame, rid_map: dict[str, int]) -> pd.DataFrame
     process: lang filter, latest-crawl-wins, pure extraction kernels.
     ``rid_map`` (url → rid) comes from the pipeline's own table — rid is
     Spark's xxhash64 and is validated for injectivity, not recomputed."""
-    from biomedical_entity_linking_spark.extract import (
-        _TITLE_RE,
-        _clean_fragment,
-        _extract_one,
-    )
+    from biomedical_entity_linking_spark.extract import _extract_one
 
     df = pages[pages["lang"] == "eng"]
     # latest warc_ts per url (generator guarantees distinct ts per url)
@@ -62,14 +58,10 @@ def oracle_extract(pages: pd.DataFrame, rid_map: dict[str, int]) -> pd.DataFrame
     assert not df.duplicated(["url", "warc_ts"]).any(), "ts tie: ordering ambiguous"
     df = df.drop_duplicates("url", keep="first").copy()
 
-    def title_of(h):
-        if h is None:
-            return ""
-        m = _TITLE_RE.search(bytes(h))
-        return _clean_fragment(m.group(1)) if m else ""
-
-    df["extracted_text"] = [ _extract_one(bytes(h) if h is not None else None) for h in df["html"] ]
-    df["title"] = [title_of(h) for h in df["html"]]
+    pairs = [_extract_one(bytes(h) if h is not None else None)
+             for h in df["html"]]
+    df["extracted_text"] = [text for text, _ in pairs]
+    df["title"] = [title for _, title in pairs]
     df["norm_domain"] = df["url"].map(_norm_domain)
     df["norm_title"] = df["title"].map(_norm_title)
     df["rid"] = df["url"].map(rid_map)

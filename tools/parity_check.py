@@ -56,7 +56,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from biomedical_entity_linking_spark.session import get_spark
 
-    spark = get_spark(app_name="parity", cores=8)
+    spark = get_spark(app_name="parity")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

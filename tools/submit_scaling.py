@@ -51,8 +51,13 @@ def build_zip(out_path: str) -> str:
 
 def gen_pages(n_entities: int) -> str:
     """Generate the seeded pages corpus once and cache it as parquet under
-    ``/tmp/spark_linkage_scaling`` (reused by later runs of the same size)."""
+    ``/tmp/spark_linkage_scaling`` (reused by later runs of the same size).
+    Works from any cwd: ``ROOT`` goes on the driver's ``sys.path`` and, before
+    the session starts, on ``PYTHONPATH``, which the Python workers inherit."""
     sys.path.insert(0, ROOT)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     from biomedical_entity_linking_spark.data.generator import (  # noqa: PLC0415
         generate_pages_distributed,
     )
@@ -60,7 +65,7 @@ def gen_pages(n_entities: int) -> str:
 
     path = f"/tmp/spark_linkage_scaling/pages_{n_entities}_b150_seed42"
     if not os.path.exists(path + "._OK"):
-        spark = get_spark(app_name="scaling-gen", cores=32)
+        spark = get_spark(app_name="scaling-gen")
         pages, _ = generate_pages_distributed(
             spark, n_entities, seed=42, body_tokens=150, partitions=128
         )
