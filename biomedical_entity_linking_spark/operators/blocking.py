@@ -113,39 +113,30 @@ def sorted_neighborhood_keys(
     attribute partition (``data_process.py:664-684``).
 
     Scale path (no single-task global window): ``repartitionByRange`` on
-    the sort key → ``sortWithinPartitions`` → per-partition local ranks in
-    one ``mapInPandas`` pass → global rank = local rank + partition offset
-    (offsets from one tiny per-partition count collect). The ranked
-    relation is persisted so the sort executes once for both the offset
-    job and the key emission."""
+    the sort key → ``sortWithinPartitions`` → per-partition local ranks
+    read off ``monotonically_increasing_id`` (partition id in the upper
+    31 bits, row index within the partition below) → global rank = local
+    rank + partition offset (offsets from one tiny per-partition count
+    collect). The ranked relation is persisted so the sort executes once
+    for both the offset job and the key emission."""
     spark = records.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cols = [*sort_cols, "rid"]  # rid = deterministic tiebreaker
-    base = (
+    pid = F.spark_partition_id()
+    ranked = (
         records.select("rid", *sort_cols)
         .repartitionByRange(n_parts, *[F.col(c) for c in cols])
         .sortWithinPartitions(*cols)
-        .withColumn("pid", F.spark_partition_id())
+        .select(
+            "rid",
+            pid.alias("pid"),
+            (
+                F.monotonically_increasing_id()
+                - F.shiftleft(pid.cast("long"), 33)
+            ).alias("local_rank"),
+        )
+        .persist()
     )
-
-    def ranker(batches):
-        import pandas as pd
-
-        i = 0
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "rid": pdf["rid"],
-                    "pid": pdf["pid"],
-                    "local_rank": range(i, i + len(pdf)),
-                }
-            )
-            i += len(pdf)
-            yield out
-
-    ranked = base.mapInPandas(
-        ranker, "rid long, pid int, local_rank long"
-    ).persist()
     if caches is not None:
         caches.append(ranked)  # caller unpersists once key emission is written
     counts = {

@@ -1,95 +1,228 @@
-"""Blocking-quality metrics: reduction ratio / pairs completeness /
-pairs quality — the ER literature's standard triple for judging a
-blocking scheme BEFORE paying for pairwise scoring.
+"""Blocking- and cluster-quality metrics, all read off ONE (sys, gold)
+contingency relation.
 
-The reference tunes its candidate generator by measured recall@k over
-gold labels (``bioel/bioel/models/*/evaluate.py`` recall tables;
-candidate counts in ``candidate_generation.py``); this module is the
-blocking-stage analog a 100 TB ER deployment runs first: given a
-blocking key, how many of the O(n²) pairs survive (reduction ratio),
-what fraction of true same-entity pairs the blocks retain (pairs
-completeness = blocking recall), and how dense the survivors are in
-true pairs (pairs quality = blocking precision).
+Every metric here compares a SYSTEM partition of items with a GOLD one,
+and every one is a function of the contingency counts ``c`` of the
+(sys, gold) cells, their two per-side marginals and N. So how agreement
+is counted lives in one place:
 
-The construction NEVER materializes pairs. Each metric is a sum of
-``c·(c−1)/2`` over group counts:
+* ``_contingency`` — items (or counted cells to roll up) → the persisted
+  relation (sys, gold, c): one map-side-combinable shuffle, bounded by
+  the number of non-empty cells (≪ items), persisted because each
+  read-off below scans it three or four times.
+* ``_marginal`` — per side: (size, parts) = the cluster's item count and
+  how many clusters of the OTHER side it intersects.
 
-* candidate pairs   = Σ_blocks  c·(c−1)/2
-* gold pairs        = Σ_labels  c·(c−1)/2
-* true candidates   = Σ_(block,label) c·(c−1)/2   (pairs sharing both)
+Each metric is a read-off of one of two shared shapes:
 
-so the whole relation is THREE map-side-combinable count aggregations
-and a cross-joined single-row summary — at 10^12 rows the shuffle
-carries one row per (block[,label]) per upstream partition and the
-driver sees one row. This is why the combinatorial identity matters at
-scale: the naive implementation (self-join per block, then compare) is
-exactly the quadratic explosion blocking exists to avoid.
+* ``_pair_counts`` — ONE row from a tagged union of the cells
+  (side = both) and the two marginals (side = sys / gold): n_items, the
+  pair counts p_sys / p_gold / p_both (Σ size·(size−1)/2 on each side)
+  and the link sums Σ(size − parts) / Σ(size − 1) on each side. No
+  window, no sort, no join: ``blocking_quality``, ``ari_quality``,
+  ``muc_over``, ``blanc_over``. (A first windowed ARI/MUC cut — per-side
+  sums over two sorted windows plus first-row conditional sums — scaled
+  at 0.305 on 50M items against 0.755 for this sort-free shape.)
+* ``_cells`` — the contingency joined to its marginals, one
+  (c, n_sys, n_gold) row per cell: ``bcubed_quality``,
+  ``vmeasure_over``.
 
-Blocking keys: the engine's certified sign-bit coarse quantizer
-(``similarity._cell8_expr`` / ``_CELL8_SQL`` — 8 sign bits of the
-embedding, the same cells the IVF path shards on) at THREE widths
-(8/6/4 bits, coarser = right-shift), one output row per scheme — the
-tuning table a deployment reads to pick its operating point on the
-reduction-vs-completeness tradeoff before committing a 100 TB scoring
-run. Cross-engine float-free comparison (``> 0`` sign tests, integer
-everything after) keeps the value-hash bit-exact.
+Pairs never materialize: the naive implementation (self-join per
+cluster, then compare) is exactly the quadratic explosion these
+metrics exist to judge. Ratios are integer parts-per-million
+(``· 10^6 div denominator``) — exact integer division in both engines,
+no float summation anywhere — so each ``*_QUALITY_SQL`` DuckDB oracle,
+built from the same two shapes (``_cont_sql``, ``_counts_sql``,
+``_cells_sql``), certifies the value hash bit-exactly. Contingency keys
+are bigint here; hash long string cluster keys (xxhash64 pair) first.
 
-Ratios are reported in integer parts-per-million (``· 10^6 div
-denominator``) — exact integer division in both engines, no float
-summation anywhere.
+Reference analog: ``eval_cluster_linking.py`` reports pairwise P/R/F1 of
+predicted vs gold clusters — the pair-counting member of this family.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .similarity import _CELL8_SQL, _cell8_expr
 
 _PPM = 1_000_000
+_DEC = "decimal(38,0)"  # Spark twin of the oracle's HUGEINT widening
 _SCHEME_BITS = (8, 6, 4)
 _BCUBED_BITS = 4  # system clustering under evaluation: 4-bit sign cells
 
 
-def _pair_sum(df: DataFrame, keys: list[str], out: str) -> DataFrame:
-    """Σ over groups of c·(c−1)/2 as a single-row relation."""
+# ---------------------------------------------------------------------------
+# The shared contingency relation and its two read-off shapes
+# ---------------------------------------------------------------------------
+
+
+def _contingency(rows: DataFrame) -> DataFrame:
+    """(sys, gold) items, or (sys, gold, c) cells to roll up → the
+    persisted contingency relation (sys, gold, c)."""
+    c = F.sum("c") if "c" in rows.columns else F.count("*")
     return (
-        df.groupBy(*keys)
-        .agg(F.count("*").alias("c"))
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("c * (c - 1) div 2")), F.lit(0)
-            ).alias(out)
+        rows.groupBy("sys", "gold")
+        .agg(c.cast("bigint").alias("c"))
+        .persist()  # every read-off scans it three or four times
+    )
+
+
+def _marginal(cont: DataFrame, side: str) -> DataFrame:
+    """One row per ``side`` cluster: (key, size, parts)."""
+    return cont.groupBy(side).agg(
+        F.sum("c").alias("size"), F.count("*").alias("parts")
+    )
+
+
+def _pair_counts(cont: DataFrame) -> DataFrame:
+    """Contingency → ONE row: n_items, p_sys, p_gold, p_both, and the
+    link sums r_num / r_den (gold: Σ size − parts, Σ size − 1) and
+    p_num / p_den (the same on the sys side)."""
+    tagged = cont.select(
+        F.lit("both").alias("side"),
+        F.col("c").alias("size"),
+        F.lit(1).cast("bigint").alias("parts"),
+    )
+    for side in ("sys", "gold"):
+        tagged = tagged.unionByName(
+            _marginal(cont, side).select(
+                F.lit(side).alias("side"), "size", "parts"
+            )
         )
+
+    def on(side: str, expr: str):
+        return F.sum(F.when(F.col("side") == side, F.expr(expr)))
+
+    pairs = "size * (size - 1) div 2"
+    return tagged.agg(
+        on("sys", "size").alias("n_items"),
+        on("sys", pairs).alias("p_sys"),
+        on("gold", pairs).alias("p_gold"),
+        on("both", pairs).alias("p_both"),
+        on("gold", "size - parts").alias("r_num"),
+        on("gold", "size - 1").alias("r_den"),
+        on("sys", "size - parts").alias("p_num"),
+        on("sys", "size - 1").alias("p_den"),
+    )
+
+
+def _cells(cont: DataFrame) -> DataFrame:
+    """Contingency joined to both marginals by key (sort-free, never
+    windowed): one (c, n_sys, n_gold) row per cell."""
+    by_sys = _marginal(cont, "sys").select("sys", F.col("size").alias("n_sys"))
+    by_gold = _marginal(cont, "gold").select(
+        "gold", F.col("size").alias("n_gold")
+    )
+    return (
+        cont.join(by_sys, "sys").join(by_gold, "gold")
+        .select("c", "n_sys", "n_gold")
+    )
+
+
+def _cont_sql(
+    src: str,
+    name: str = "cont",
+    sys: str = "sys",
+    gold: str = "gold",
+    c: str = "count(*)",
+) -> str:
+    """Oracle twin of ``_contingency`` + ``_marginal``: CTE ``name``
+    (sys, gold, c) over ``src``, then ``name_sys`` / ``name_gold``."""
+    cont = f"""{name} AS (
+  SELECT {sys} AS sys, {gold} AS gold, CAST({c} AS BIGINT) AS c
+  FROM {src} GROUP BY 1, 2
+)"""
+    return ",\n".join([cont, *(_marg_sql(name, s) for s in ("sys", "gold"))])
+
+
+def _marg_sql(cont: str, side: str) -> str:
+    return f"""{cont}_{side} AS (
+  SELECT {side}, CAST(sum(c) AS BIGINT) AS size,
+         CAST(count(*) AS BIGINT) AS parts
+  FROM {cont} GROUP BY {side}
+)"""
+
+
+def _counts_sql(cont: str = "cont") -> str:
+    """Oracle twin of ``_pair_counts``: a one-row SELECT."""
+
+    def on(side: str, expr: str) -> str:
+        return f"CAST(sum(CASE WHEN side = '{side}' THEN {expr} END) AS BIGINT)"
+
+    pairs = "size * (size - 1) // 2"
+    return f"""
+  SELECT {on("sys", "size")} AS n_items,
+         {on("sys", pairs)} AS p_sys,
+         {on("gold", pairs)} AS p_gold,
+         {on("both", pairs)} AS p_both,
+         {on("gold", "size - parts")} AS r_num,
+         {on("gold", "size - 1")} AS r_den,
+         {on("sys", "size - parts")} AS p_num,
+         {on("sys", "size - 1")} AS p_den
+  FROM (SELECT 'both' AS side, c AS size, 1 AS parts FROM {cont}
+        UNION ALL SELECT 'sys', size, parts FROM {cont}_sys
+        UNION ALL SELECT 'gold', size, parts FROM {cont}_gold)
+"""
+
+
+def _cells_sql(cont: str = "cont") -> str:
+    """Oracle twin of ``_cells``."""
+    return f"""
+  SELECT c, s.size AS n_sys, g.size AS n_gold
+  FROM {cont} JOIN {cont}_sys s USING (sys) JOIN {cont}_gold g USING (gold)
+"""
+
+
+# ---------------------------------------------------------------------------
+# Blocking quality and B-cubed over the engine's sign-bit cells
+# ---------------------------------------------------------------------------
+
+
+def _embedding_cells(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
+    """embeddings → (sys = ``bits``-bit sign cell, gold = label)."""
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        F.shiftright(_cell8_expr(F.col("embedding")), 8 - bits).alias("sys"),
+        F.col("label").alias("gold"),
     )
 
 
 def blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings → one row PER BLOCKING SCHEME of counts + ppm ratios.
+    """embeddings → one row PER BLOCKING SCHEME of counts + ppm ratios:
+    reduction ratio / pairs completeness / pairs quality, the ER
+    literature's standard triple for judging a blocking scheme BEFORE
+    paying for pairwise scoring.
 
     Columns: scheme_bits, n_items, total_pairs, cand_pairs, gold_pairs,
     true_cand_pairs, reduction_ratio_ppm, completeness_ppm, quality_ppm.
+
+    The reference tunes its candidate generator by measured recall@k
+    over gold labels (``bioel/bioel/models/*/evaluate.py``); this is the
+    blocking-stage analog. Blocking keys are the engine's certified
+    sign-bit coarse quantizer (``similarity._cell8_expr`` — 8 sign bits
+    of the embedding, the same cells the IVF path shards on) at THREE
+    widths (8/6/4 bits), one row per scheme — the tuning table a
+    deployment reads to pick its reduction-vs-completeness operating
+    point. With sys = the cell and gold = the label, the three pair
+    counts are the contingency's p_sys / p_gold / p_both; the 8-bit
+    contingency is built once from the items and rolled up to 6 and 4
+    bits by summing ``c``.
     """
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        "label",
-        _cell8_expr(F.col("embedding")).alias("cell8"),
-    )
-    # gold pairs are scheme-independent; compute once
-    n = emb.agg(F.count("*").alias("n_items"))
-    gold = _pair_sum(emb, ["label"], "gold_pairs")
+    cont8 = _contingency(_embedding_cells(spark, sf_dir, 8))
     rows = None
     for bits in _SCHEME_BITS:
-        cells = emb.select(
-            "label", F.shiftright("cell8", 8 - bits).alias("cell")
+        cont = _contingency(
+            cont8.select(
+                F.shiftright("sys", 8 - bits).alias("sys"), "gold", "c"
+            )
         )
-        cand = _pair_sum(cells, ["cell"], "cand_pairs")
-        true_cand = _pair_sum(cells, ["cell", "label"], "true_cand_pairs")
-        row = (
-            n.join(gold)
-            .join(cand)
-            .join(true_cand)
-            .select(F.lit(bits).cast("int").alias("scheme_bits"), "*")
+        row = _pair_counts(cont).select(
+            F.lit(bits).cast("int").alias("scheme_bits"),
+            "n_items",
+            F.col("p_sys").alias("cand_pairs"),
+            F.col("p_gold").alias("gold_pairs"),
+            F.col("p_both").alias("true_cand_pairs"),
         )
         rows = row if rows is None else rows.unionByName(row)
     return rows.select(
@@ -115,81 +248,63 @@ def blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bcubed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings → one row of B-cubed precision/recall/F1 (integer ppm).
 
-    B-cubed is the ER literature's item-weighted cluster metric (the
-    reference reports entity-level linking accuracy the same
-    per-mention-averaged way, ``eval_cluster_linking.py`` metrics): for
+    B-cubed is the ER literature's item-weighted cluster metric: for
     each ITEM, precision = |its cluster ∩ its gold class| / |cluster|
     and recall = the same overlap / |gold class|; corpus scores are the
-    item averages. Unlike pairwise F1 it neither explodes quadratically
-    nor lets one giant cluster dominate — which is why it is computable
-    here with ZERO pair materialization: three group-count relations
-    (cluster, class, overlap), broadcast back onto items, one final sum.
-
-    At 10^12 items the count relations stay bounded by cluster/class
-    cardinality, the items relation never shuffles (broadcast joins),
-    and the final average is a single map-side-combinable agg.
-
-    The system clustering under evaluation is the 4-bit sign-cell
+    item averages. Every item of a cell shares its ratios, so the item
+    sum is Σ_cells c·(c·10⁶ div n_sys) (recall: n_gold) — the same
+    integer as the per-item average, read off ``_cells`` with no item
+    rows joined back. The system clustering is the 4-bit sign-cell
     assignment (the coarsest ``blocking_quality`` scheme, so the two
-    relations read together: this is the cluster-level view of the same
-    system the pair-level table scores). Per-item ratios are integer
-    micro-units (``· 10^6 div size``), averaged by integer div — exact
-    in both engines.
+    relations read together).
     """
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        "label",
-        F.shiftright(
-            _cell8_expr(F.col("embedding")), 8 - _BCUBED_BITS
-        ).alias("cell"),
+    sums = _cells(
+        _contingency(_embedding_cells(spark, sf_dir, _BCUBED_BITS))
+    ).agg(
+        F.sum("c").alias("n_items"),
+        F.sum(F.expr(f"c * (c * {_PPM} div n_sys)")).alias("p_sum"),
+        F.sum(F.expr(f"c * (c * {_PPM} div n_gold)")).alias("r_sum"),
     )
-    csz = emb.groupBy("cell").agg(F.count("*").alias("c"))
-    gsz = emb.groupBy("label").agg(F.count("*").alias("g"))
-    osz = emb.groupBy("cell", "label").agg(F.count("*").alias("o"))
-    per_item = (
-        emb.join(F.broadcast(csz), "cell")
-        .join(F.broadcast(gsz), "label")
-        .join(F.broadcast(osz), ["cell", "label"])
-        .select(
-            F.expr(f"o * {_PPM} div c").alias("p_ppm"),
-            F.expr(f"o * {_PPM} div g").alias("r_ppm"),
-        )
-    )
-    return per_item.agg(
-        F.count("*").alias("n_items"),
-        F.expr("sum(p_ppm) div count(*)").alias("bcubed_precision_ppm"),
-        F.expr("sum(r_ppm) div count(*)").alias("bcubed_recall_ppm"),
+    return sums.select(
+        "n_items",
+        F.expr("p_sum div n_items").alias("bcubed_precision_ppm"),
+        F.expr("r_sum div n_items").alias("bcubed_recall_ppm"),
+    ).select(
+        "*",
         F.expr(
-            "2 * (sum(p_ppm) div count(*)) * (sum(r_ppm) div count(*))"
-            " div ((sum(p_ppm) div count(*)) + (sum(r_ppm) div count(*)))"
+            "2 * bcubed_precision_ppm * bcubed_recall_ppm"
+            " div (bcubed_precision_ppm + bcubed_recall_ppm)"
         ).alias("bcubed_f1_ppm"),
     )
 
 
+def _embedding_cells_sql(bits: int) -> str:
+    """Oracle twin of ``_embedding_cells``: (cell, label)."""
+    return (
+        f"SELECT label, ({_CELL8_SQL}) // {1 << (8 - bits)} AS cell"
+        " FROM embeddings"
+    )
+
+
 BCUBED_QUALITY_SQL = f"""
-WITH e AS (
-  SELECT vec_id, label,
-         ({_CELL8_SQL}) // {1 << (8 - _BCUBED_BITS)} AS cell
-  FROM embeddings
+WITH e AS ({_embedding_cells_sql(_BCUBED_BITS)}),
+{_cont_sql("e", sys="cell", gold="label")},
+sums AS (
+  SELECT CAST(sum(c) AS BIGINT) AS n_items,
+         CAST(sum(c * (c * {_PPM} // n_sys)) AS BIGINT) AS p_sum,
+         CAST(sum(c * (c * {_PPM} // n_gold)) AS BIGINT) AS r_sum
+  FROM ({_cells_sql()})
 ),
-csz AS (SELECT cell, CAST(count(*) AS BIGINT) AS c FROM e GROUP BY cell),
-gsz AS (SELECT label, CAST(count(*) AS BIGINT) AS g FROM e GROUP BY label),
-osz AS (SELECT cell, label, CAST(count(*) AS BIGINT) AS o
-        FROM e GROUP BY cell, label),
-per_item AS (
-  SELECT o * {_PPM} // c AS p_ppm, o * {_PPM} // g AS r_ppm
-  FROM e
-  JOIN csz USING (cell)
-  JOIN gsz USING (label)
-  JOIN osz USING (cell, label)
+ppm AS (
+  SELECT n_items, p_sum // n_items AS bcubed_precision_ppm,
+         r_sum // n_items AS bcubed_recall_ppm
+  FROM sums
 )
-SELECT CAST(count(*) AS BIGINT) AS n_items,
-       CAST(sum(p_ppm) // count(*) AS BIGINT) AS bcubed_precision_ppm,
-       CAST(sum(r_ppm) // count(*) AS BIGINT) AS bcubed_recall_ppm,
-       CAST(2 * (sum(p_ppm) // count(*)) * (sum(r_ppm) // count(*))
-         // ((sum(p_ppm) // count(*)) + (sum(r_ppm) // count(*)))
-         AS BIGINT) AS bcubed_f1_ppm
-FROM per_item
+SELECT n_items, bcubed_precision_ppm, bcubed_recall_ppm,
+       CAST(2 * bcubed_precision_ppm * bcubed_recall_ppm
+         // (bcubed_precision_ppm + bcubed_recall_ppm) AS BIGINT)
+         AS bcubed_f1_ppm
+FROM ppm
 """
 
 
@@ -198,47 +313,37 @@ def _scheme_sql(bits: int) -> str:
 SELECT {bits} AS scheme_bits,
        n_items,
        n_items * (n_items - 1) // 2 AS total_pairs,
-       CAST(cand_pairs AS BIGINT) AS cand_pairs,
-       CAST(gold_pairs AS BIGINT) AS gold_pairs,
-       CAST(true_cand_pairs AS BIGINT) AS true_cand_pairs,
-       CAST((n_items * (n_items - 1) // 2 - cand_pairs) * {_PPM}
+       p_sys AS cand_pairs,
+       p_gold AS gold_pairs,
+       p_both AS true_cand_pairs,
+       CAST((n_items * (n_items - 1) // 2 - p_sys) * {_PPM}
          // (n_items * (n_items - 1) // 2) AS BIGINT)
          AS reduction_ratio_ppm,
-       CAST(true_cand_pairs * {_PPM} // gold_pairs AS BIGINT)
-         AS completeness_ppm,
-       CAST(true_cand_pairs * {_PPM} // cand_pairs AS BIGINT)
-         AS quality_ppm
-FROM n, gold,
-  (SELECT coalesce(sum(c * (c - 1) // 2), 0) AS cand_pairs FROM
-   (SELECT CAST(count(*) AS BIGINT) AS c FROM e
-    GROUP BY cell8 // {1 << (8 - bits)})),
-  (SELECT coalesce(sum(c * (c - 1) // 2), 0) AS true_cand_pairs FROM
-   (SELECT CAST(count(*) AS BIGINT) AS c FROM e
-    GROUP BY cell8 // {1 << (8 - bits)}, label))
+       CAST(p_both * {_PPM} // p_gold AS BIGINT) AS completeness_ppm,
+       CAST(p_both * {_PPM} // p_sys AS BIGINT) AS quality_ppm
+FROM ({_counts_sql(f"cont{bits}")})
 """
 
 
 BLOCKING_QUALITY_SQL = f"""
-WITH e AS (
-  SELECT vec_id, label, ({_CELL8_SQL}) AS cell8 FROM embeddings
-),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n_items FROM e),
-gold AS (SELECT coalesce(sum(c * (c - 1) // 2), 0) AS gold_pairs FROM
-         (SELECT CAST(count(*) AS BIGINT) AS c FROM e GROUP BY label))
+WITH e AS ({_embedding_cells_sql(8)}),
+{_cont_sql("e", sys="cell", gold="label")},
+{",".join(
+    _cont_sql("cont", f"cont{b}", sys=f"sys // {1 << (8 - b)}", c="sum(c)")
+    for b in _SCHEME_BITS
+)}
 {" UNION ALL ".join(_scheme_sql(b) for b in _SCHEME_BITS)}
 ORDER BY scheme_bits DESC
 """
 
 
 # ---------------------------------------------------------------------------
-# Rand / Adjusted-Rand agreement between two clusterings (contingency-based)
+# Cluster agreement between a synthesized SYSTEM and GOLD document
+# clustering: Rand/ARI, MUC, V-measure, BLANC
 # ---------------------------------------------------------------------------
 
-_ARI_PPM = 1_000_000
-
-# the synthesized SYSTEM-vs-GOLD clusterings shared by ari_quality and
-# muc_quality: gold = doc_id div 4; system corrupts gold BOTH ways
-# (5k/5k+1 merge = over-merge, doc_id ≡ 3 mod 8 → singleton = over-split)
+# gold = doc_id div 4; system corrupts gold BOTH ways (5k/5k+1 merge =
+# over-merge, doc_id ≡ 3 mod 8 → singleton = over-split)
 _SYS_GOLD_SQL = """
   SELECT CASE WHEN doc_id % 8 = 3 THEN 1000000000 + doc_id
               WHEN (doc_id // 4) % 5 < 2
@@ -250,6 +355,12 @@ _SYS_GOLD_SQL = """
 
 
 def _sys_gold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → (sys, gold). The documents table's natural keys are
+    degenerate for pair counting (no exact-dup texts → every gold pair
+    count is 0), so like ``setjoin``/``editjoin``/``linkgraph`` the two
+    clusterings are SYNTHESIZED deterministically from doc_id and
+    mirrored verbatim in the oracle (``_SYS_GOLD_SQL``) — the hash
+    certifies the contingency read-offs, not the generator."""
     gold = F.expr("doc_id div 4")
     merged = F.when(gold % 5 < 2, gold - (gold % 5)).otherwise(gold)
     return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -264,102 +375,36 @@ def _sys_gold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ari_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → ONE row: Rand index + Adjusted Rand Index (Hubert &
-    Arabie 1985) between a SYSTEM clustering and gold, from the
-    contingency table alone — pairs NEVER materialized.
+    Arabie 1985) between the synthesized system clustering and gold,
+    read off ``_pair_counts``.
 
-    ``bcubed_quality`` is the item-weighted view of cluster agreement;
-    this is the pair-counting view every clustering paper reports
-    beside it. The documents table's natural keys are degenerate for
-    pair counting (no exact-dup texts → every gold pair count is 0),
-    so like ``setjoin``/``editjoin``/``linkgraph`` the two clusterings
-    are SYNTHESIZED deterministically from doc_id and mirrored
-    verbatim in the oracle — the hash certifies the CONTINGENCY
-    pipeline, not the generator: gold = doc_id div 4 (clusters of 4);
-    system = gold corrupted BOTH ways — gold clusters 5k and 5k+1
-    merge (sys over-merge), and every doc_id ≡ 3 (mod 8) splits into
-    its own singleton (sys over-split).
-
-    All pair counts are the integer identity Σ c·(c−1)/2 over the
-    CONTINGENCY relation (one groupBy keyed by (sys, gold) — bounded
-    by cluster-pair cardinality, ≪ items); the marginal sums come off
-    that same relation via two window sums + first-row conditional
-    aggregation, so the whole metric is ONE shuffle on the contingency
-    key plus two bounded windows. RI = (T + 2·Σij − Σa − Σb) / T and
-    the ARI ratio are emitted in ppm; the cross-products T·Σij etc.
-    are widened to decimal(38,0) (Spark) / HUGEINT (DuckDB oracle) —
-    int64 would overflow past ~4.3e9 items — and the signed ppm
-    division is SIGN-SPLIT (negate, divide non-negatives, negate back)
-    because the engines disagree on negative integer division. At
-    100 TB the only caveat is contingency-key width: bigint keys here;
-    hash long string cluster keys (xxhash64 pair) first.
-
-    Reference analog: ``eval_cluster_linking.py`` reports pairwise
-    P/R/F1 of predicted vs gold clusters — the same pair-counting
-    family; RI/ARI add the chance-corrected summary statistic.
+    RI = (T + 2·Σij − Σa − Σb) / T and the ARI ratio are emitted in ppm;
+    the cross-products T·Σij etc. are widened to decimal(38,0) / HUGEINT
+    (int64 would overflow past ~4.3e9 items) and the signed ppm division
+    is SIGN-SPLIT (negate, divide non-negatives, negate back) because
+    the engines disagree on negative integer division.
     """
-    docs = _sys_gold_docs(spark, sf_dir)
-    cont = docs.groupBy("sys", "gold").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
-    w_sys = Window.partitionBy("sys")
-    w_gold = Window.partitionBy("gold")
-    cont2 = cont.select(
-        "c",
-        F.sum("c").over(w_sys).alias("n_sys"),
-        F.sum("c").over(w_gold).alias("n_gold"),
-        F.row_number()
-        .over(Window.partitionBy("sys").orderBy("gold"))
-        .alias("rn_sys"),
-        F.row_number()
-        .over(Window.partitionBy("gold").orderBy("sys"))
-        .alias("rn_gold"),
-    )
-    agg = cont2.agg(
-        F.sum("c").alias("n_items"),
-        F.sum(F.expr("c * (c - 1) div 2")).alias("p_both"),
-        F.sum(
-            F.when(F.col("rn_sys") == 1, F.expr("n_sys * (n_sys - 1) div 2"))
-        ).alias("p_sys"),
-        F.sum(
-            F.when(
-                F.col("rn_gold") == 1, F.expr("n_gold * (n_gold - 1) div 2")
-            )
-        ).alias("p_gold"),
-    )
-    dec = "decimal(38,0)"
-    return agg.select(
+    counts = _pair_counts(_contingency(_sys_gold_docs(spark, sf_dir)))
+    wide = counts.select(
         "n_items",
         F.expr("n_items * (n_items - 1) div 2").alias("t_pairs"),
         "p_sys",
         "p_gold",
         "p_both",
-    ).select(
-        "n_items",
-        "t_pairs",
-        "p_sys",
-        "p_gold",
-        "p_both",
+    )
+    t, a, b, i = (
+        f"cast({c} as {_DEC})" for c in ("t_pairs", "p_sys", "p_gold", "p_both")
+    )
+    den = f"({t} * ({a} + {b}) - 2 * {a} * {b})"
+    return wide.select(
+        "*",
         F.expr(
-            f"cast((cast(t_pairs as {dec}) + 2 * cast(p_both as {dec})"
-            f" - cast(p_sys as {dec}) - cast(p_gold as {dec}))"
-            f" * {_ARI_PPM} div cast(t_pairs as {dec}) as bigint)"
+            f"cast(({t} + 2 * {i} - {a} - {b}) * {_PPM} div {t} as bigint)"
         ).alias("ri_ppm"),
         F.expr(
-            f"""cast(CASE WHEN
-              2 * (cast(t_pairs as {dec}) * cast(p_both as {dec})
-                   - cast(p_sys as {dec}) * cast(p_gold as {dec})) >= 0
-            THEN 2 * (cast(t_pairs as {dec}) * cast(p_both as {dec})
-                      - cast(p_sys as {dec}) * cast(p_gold as {dec}))
-                 * {_ARI_PPM}
-                 div (cast(t_pairs as {dec})
-                      * (cast(p_sys as {dec}) + cast(p_gold as {dec}))
-                      - 2 * cast(p_sys as {dec}) * cast(p_gold as {dec}))
-            ELSE -((2 * (cast(p_sys as {dec}) * cast(p_gold as {dec})
-                         - cast(t_pairs as {dec}) * cast(p_both as {dec})))
-                   * {_ARI_PPM}
-                   div (cast(t_pairs as {dec})
-                        * (cast(p_sys as {dec}) + cast(p_gold as {dec}))
-                        - 2 * cast(p_sys as {dec}) * cast(p_gold as {dec})))
+            f"""cast(CASE WHEN 2 * ({t} * {i} - {a} * {b}) >= 0
+              THEN 2 * ({t} * {i} - {a} * {b}) * {_PPM} div {den}
+              ELSE -((2 * ({a} * {b} - {t} * {i})) * {_PPM} div {den})
             END as bigint)"""
         ).alias("ari_ppm"),
     )
@@ -369,27 +414,8 @@ ARI_QUALITY_SQL = f"""
 WITH docs AS (
 {_SYS_GOLD_SQL}
 ),
-cont AS (
-  SELECT sys, gold, CAST(count(*) AS BIGINT) AS c
-  FROM docs GROUP BY sys, gold
-),
-cont2 AS (
-  SELECT c,
-         sum(c) OVER (PARTITION BY sys) AS n_sys,
-         sum(c) OVER (PARTITION BY gold) AS n_gold,
-         row_number() OVER (PARTITION BY sys ORDER BY gold) AS rn_sys,
-         row_number() OVER (PARTITION BY gold ORDER BY sys) AS rn_gold
-  FROM cont
-),
-agg AS (
-  SELECT CAST(sum(c) AS BIGINT) AS n_items,
-         CAST(coalesce(sum(c * (c - 1) // 2), 0) AS BIGINT) AS p_both,
-         CAST(coalesce(sum(CASE WHEN rn_sys = 1
-                 THEN n_sys * (n_sys - 1) // 2 END), 0) AS BIGINT) AS p_sys,
-         CAST(coalesce(sum(CASE WHEN rn_gold = 1
-                 THEN n_gold * (n_gold - 1) // 2 END), 0) AS BIGINT) AS p_gold
-  FROM cont2
-),
+{_cont_sql("docs")},
+agg AS ({_counts_sql()}),
 wide AS (
   SELECT n_items,
          CAST(n_items * (n_items - 1) // 2 AS BIGINT) AS t_pairs,
@@ -399,24 +425,20 @@ wide AS (
   FROM (SELECT *, n_items * (n_items - 1) // 2 AS t FROM agg)
 )
 SELECT n_items, t_pairs, p_sys, p_gold, p_both,
-       CAST((th + 2 * ih - ah - bh) * {_ARI_PPM} // th AS BIGINT) AS ri_ppm,
+       CAST((th + 2 * ih - ah - bh) * {_PPM} // th AS BIGINT) AS ri_ppm,
        CAST(CASE WHEN 2 * (th * ih - ah * bh) >= 0
-         THEN 2 * (th * ih - ah * bh) * {_ARI_PPM}
+         THEN 2 * (th * ih - ah * bh) * {_PPM}
               // (th * (ah + bh) - 2 * ah * bh)
-         ELSE -((2 * (ah * bh - th * ih)) * {_ARI_PPM}
+         ELSE -((2 * (ah * bh - th * ih)) * {_PPM}
                 // (th * (ah + bh) - 2 * ah * bh))
        END AS BIGINT) AS ari_ppm
 FROM wide
 """
 
 
-# ---------------------------------------------------------------------------
-# MUC link-based agreement (Vilain et al. 1995) — the third classic metric
-# ---------------------------------------------------------------------------
-
-
 def muc_over(docs: DataFrame) -> DataFrame:
-    """Generic core over ANY (sys, gold) item relation: one MUC row.
+    """Generic core over ANY (sys, gold) item relation: one MUC row
+    (Vilain et al. 1995), read off ``_pair_counts``.
 
     MUC counts MISSING LINKS, not pairs: a cluster of size c needs c−1
     links to hold together, and a gold cluster scattered over p system
@@ -425,54 +447,12 @@ def muc_over(docs: DataFrame) -> DataFrame:
       recall    = Σ_gold (|g| − p(g)) / Σ_gold (|g| − 1)
       precision = Σ_sys  (|s| − q(s)) / Σ_sys  (|s| − 1)
 
-    with p(g)/q(s) = how many partitions of the OTHER clustering the
-    cluster intersects. Both statistics live entirely on the
-    CONTINGENCY relation: one item-scale shuffle keyed by (sys, gold)
-    (persisted — read once per side), then two bounded sort-free
-    groupBys whose (size, parts) rows union into ONE final conditional
-    aggregation — no window, no sort, no join anywhere. Pairs never
-    materialize, numerators are non-negative by construction so
-    integer ppm division is engine-exact.
-    Singletons contribute 0/0 and drop out, the standard MUC blind spot
-    (why bcubed_quality sits beside this relation).
+    with p(g)/q(s) = the marginal's ``parts``. Numerators are
+    non-negative, so integer ppm division is engine-exact. Singletons
+    contribute 0/0 and drop out, the standard MUC blind spot (why
+    bcubed_quality sits beside this relation).
     """
-    cont = docs.groupBy("sys", "gold").agg(
-        F.count("*").cast("bigint").alias("c")
-    ).persist()  # read twice (per-gold and per-sys), bounded by
-    # contingency cardinality — materialize instead of re-shuffling items
-    # per-side statistics as plain map-side-combinable groupBys — NO
-    # sorted windows (a first cut used the ari_quality row_number trick;
-    # at 50M items the two window SORTS over a 12.5M-row contingency
-    # dominated and scaled at 0.305 — the tagged-union agg removes them)
-    by_gold = cont.groupBy("gold").agg(
-        F.sum("c").alias("size"), F.count("*").alias("parts")
-    )
-    by_sys = cont.groupBy("sys").agg(
-        F.sum("c").alias("size"), F.count("*").alias("parts")
-    )
-    tagged = by_gold.select(
-        F.lit(1).alias("is_gold"), "size", "parts"
-    ).unionByName(
-        by_sys.select(F.lit(0).alias("is_gold"), "size", "parts")
-    )
-    agg = tagged.agg(
-        F.sum(F.when(F.col("is_gold") == 1, F.col("size"))).alias(
-            "n_items"
-        ),
-        F.sum(
-            F.when(F.col("is_gold") == 1, F.expr("size - parts"))
-        ).alias("r_num"),
-        F.sum(F.when(F.col("is_gold") == 1, F.expr("size - 1"))).alias(
-            "r_den"
-        ),
-        F.sum(
-            F.when(F.col("is_gold") == 0, F.expr("size - parts"))
-        ).alias("p_num"),
-        F.sum(F.when(F.col("is_gold") == 0, F.expr("size - 1"))).alias(
-            "p_den"
-        ),
-    )
-    return agg.select(
+    return _pair_counts(_contingency(docs)).select(
         "n_items",
         "r_num",
         "r_den",
@@ -490,20 +470,10 @@ def muc_over(docs: DataFrame) -> DataFrame:
 
 
 def muc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → ONE row of MUC recall/precision/F1 (integer ppm)
-    over the SAME synthesized system-vs-gold clusterings ari_quality
-    scores — the family reads together: pairwise (t_pairs identities),
-    item-weighted (B-cubed), chance-corrected (ARI), and link-based
-    (MUC, this row: over-merges are FREE under MUC recall — the metric
-    that explains why a link-happy system can look good here and bad
-    under B-cubed precision).
-
-    Reference analog: ``eval_cluster_linking.py`` reports pairwise
-    cluster P/R/F1; MUC is the coreference literature's third member
-    of that family. Scale: contingency-bounded like ari_quality — one
-    item-scale shuffle; everything after runs over ≤ contingency-
-    cardinality rows.
-    """
+    """documents → ONE row of MUC recall/precision/F1 (integer ppm) over
+    the synthesized clusterings (``_sys_gold_docs``). Over-merges are
+    FREE under MUC recall — the metric that explains why a link-happy
+    system can look good here and bad under B-cubed precision."""
     return muc_over(_sys_gold_docs(spark, sf_dir))
 
 
@@ -511,26 +481,12 @@ MUC_QUALITY_SQL = f"""
 WITH docs AS (
 {_SYS_GOLD_SQL}
 ),
-cont AS (
-  SELECT sys, gold, CAST(count(*) AS BIGINT) AS c
-  FROM docs GROUP BY sys, gold
-),
-rec AS (
-  SELECT CAST(sum(g) AS BIGINT) AS n_items,
-         CAST(sum(g - p) AS BIGINT) AS r_num,
-         CAST(sum(g - 1) AS BIGINT) AS r_den
-  FROM (SELECT gold, sum(c) AS g, count(*) AS p FROM cont GROUP BY gold)
-),
-prec AS (
-  SELECT CAST(sum(s - q) AS BIGINT) AS p_num,
-         CAST(sum(s - 1) AS BIGINT) AS p_den
-  FROM (SELECT sys, sum(c) AS s, count(*) AS q FROM cont GROUP BY sys)
-),
+{_cont_sql("docs")},
 ppm AS (
   SELECT n_items, r_num, r_den, p_num, p_den,
          CAST(r_num * {_PPM} // r_den AS BIGINT) AS muc_recall_ppm,
          CAST(p_num * {_PPM} // p_den AS BIGINT) AS muc_precision_ppm
-  FROM rec, prec
+  FROM ({_counts_sql()})
 )
 SELECT *,
        CAST(2 * muc_recall_ppm * muc_precision_ppm
@@ -539,174 +495,91 @@ FROM ppm
 """
 
 
-# ---------------------------------------------------------------------------
-# V-measure (Rosenberg & Hirschberg 2007) — the entropy-based fourth member
-# ---------------------------------------------------------------------------
-
-
 def vmeasure_over(docs: DataFrame) -> DataFrame:
-    """Generic core over ANY (sys, gold) item relation: one V-measure row.
+    """Generic core over ANY (sys, gold) item relation: one V-measure row
+    (Rosenberg & Hirschberg 2007), read off ``_cells``.
 
-    V-measure is the entropy view of cluster agreement — homogeneity
-    (each system cluster holds one gold class: 1 − H(G|S)/H(G)) and
-    completeness (each gold class lands in one system cluster:
-    1 − H(S|G)/H(S)), combined by their harmonic mean. It completes
-    the classic quartet beside pair-counting ``ari_quality``,
-    item-weighted ``bcubed_quality`` and link-based ``muc_quality``.
+    Homogeneity (each system cluster holds one gold class:
+    1 − H(G|S)/H(G)) and completeness (each gold class lands in one
+    system cluster: 1 − H(S|G)/H(S)), combined by their harmonic mean.
 
     Entropies are LOG-BINNED so every statistic is integer-exact and
-    order-independent and the cross-engine value hash certifies the
-    whole pipeline — the same no-libm bin-ladder discipline as
-    ``lm_fluency``: each contingency cell contributes
-    ``c · floor(log2(marginal / c))`` via the exact identity
+    order-independent — the same no-libm bin-ladder discipline as
+    ``lm_fluency``: a cell contributes ``c · floor(log2(a / b))`` via
     ``floor(log2(a/b)) = bitlen(a div b) − 1`` for ``a ≥ b`` (and
-    ``length(bin(q))`` IS bitlen on both engines). Binned H(G|S) can
-    exceed binned H(G) on adversarial shapes, so homogeneity_ppm /
-    completeness_ppm are signed; the harmonic mean guards on both
-    being positive. No division anywhere has a negative operand, so
-    engine div semantics agree without the ari sign-split.
-
-    Scale shape (100 TB): ONE item-scale shuffle builds the persisted
-    contingency (bounded by cluster-pair cardinality, ≪ items);
-    marginals are sort-free map-side-combinable groupBys over it (the
-    muc_over lesson — its first windowed cut scaled at 0.305, the
-    agg rewrite at 0.755 on 50M items) rejoined by key; the item
-    total N rides a one-row broadcast. The only wide arithmetic is
-    the two ppm numerators (1e6 · Σ c·bits can pass int64 past ~1e11
-    items), widened to decimal(38,0) / HUGEINT like ari_quality.
-
-    Reference analog: ``eval_cluster_linking.py`` reports pairwise
-    cluster P/R/F1; V-measure adds the information-theoretic summary
-    the clustering literature reports beside ARI.
+    ``length(bin(q))`` IS bitlen on both engines). The conditional
+    entropies take (a, b) = (marginal, c); the marginal ones
+    (N, marginal), summed per cell — Σ over a cluster's cells of c is
+    its size, so this is the per-cluster sum exactly; N rides a one-row
+    broadcast. Binned H(G|S) can exceed binned H(G) on adversarial
+    shapes, so homogeneity_ppm / completeness_ppm are signed; the
+    harmonic mean guards on both being positive. No division has a
+    negative operand, so engine div semantics agree without the ari
+    sign-split; the two ppm numerators are widened like ari_quality.
     """
-    cont = (
-        docs.groupBy("sys", "gold")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .persist()  # read three times, contingency-bounded
+    cont = _contingency(docs)
+    n_rel = cont.agg(F.sum("c").alias("n"))
+
+    def bins(num: str, den: str):
+        return F.sum(
+            F.col("c") * (F.length(F.bin(F.expr(f"{num} div {den}"))) - 1)
+        ).cast("bigint")
+
+    sums = _cells(cont).crossJoin(F.broadcast(n_rel)).agg(
+        F.sum("c").alias("n_items"),
+        bins("n_sys", "c").alias("hgs_bins"),
+        bins("n", "n_gold").alias("hg_bins"),
+        bins("n_gold", "c").alias("hsg_bins"),
+        bins("n", "n_sys").alias("hs_bins"),
     )
-    by_sys = cont.groupBy("sys").agg(F.sum("c").alias("n_sys"))
-    by_gold = cont.groupBy("gold").agg(F.sum("c").alias("n_gold"))
-    n_rel = by_sys.agg(F.sum("n_sys").cast("bigint").alias("n_items"))
-    # conditional binned entropies: cell c against its two marginals —
-    # marginals rejoined by key (sort-free), never windowed
-    cond = (
-        cont.join(by_sys, "sys")
-        .join(by_gold, "gold")
-        .agg(
-            F.sum(
-                F.col("c")
-                * (F.length(F.bin(F.expr("n_sys div c"))) - 1)
-            ).cast("bigint").alias("hgs_bins"),
-            F.sum(
-                F.col("c")
-                * (F.length(F.bin(F.expr("n_gold div c"))) - 1)
-            ).cast("bigint").alias("hsg_bins"),
-        )
-    )
-    # marginal binned entropies need N per row: one-row broadcast,
-    # both sides tagged into ONE conditional aggregation (muc pattern)
-    marg = (
-        by_gold.select(
-            F.lit(1).alias("is_gold"), F.col("n_gold").alias("size")
-        )
-        .unionByName(
-            by_sys.select(
-                F.lit(0).alias("is_gold"), F.col("n_sys").alias("size")
-            )
-        )
-        .crossJoin(F.broadcast(n_rel))
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("is_gold") == 1,
-                    F.col("size")
-                    * (F.length(F.bin(F.expr("n_items div size"))) - 1),
-                )
-            ).cast("bigint").alias("hg_bins"),
-            F.sum(
-                F.when(
-                    F.col("is_gold") == 0,
-                    F.col("size")
-                    * (F.length(F.bin(F.expr("n_items div size"))) - 1),
-                )
-            ).cast("bigint").alias("hs_bins"),
-            F.max("n_items").alias("n_items"),
-        )
-    )
-    dec = "decimal(38,0)"
-    return (
-        cond.crossJoin(marg)
-        .select(
-            "n_items",
-            "hgs_bins",
-            "hg_bins",
-            "hsg_bins",
-            "hs_bins",
-            F.expr(
-                f"""cast(CASE WHEN hg_bins = 0 THEN {_PPM}
-                  ELSE {_PPM} - cast({_PPM} as {dec})
-                       * cast(hgs_bins as {dec})
-                       div cast(hg_bins as {dec})
-                END as bigint)"""
-            ).alias("homogeneity_ppm"),
-            F.expr(
-                f"""cast(CASE WHEN hs_bins = 0 THEN {_PPM}
-                  ELSE {_PPM} - cast({_PPM} as {dec})
-                       * cast(hsg_bins as {dec})
-                       div cast(hs_bins as {dec})
-                END as bigint)"""
-            ).alias("completeness_ppm"),
-        )
-        .select(
-            "*",
-            F.expr(
-                f"""cast(CASE WHEN homogeneity_ppm > 0
-                      AND completeness_ppm > 0
-                  THEN 2 * homogeneity_ppm * completeness_ppm
-                       div (homogeneity_ppm + completeness_ppm)
-                  ELSE 0 END as bigint)"""
-            ).alias("v_ppm"),
-        )
+    return sums.select(
+        "*",
+        F.expr(
+            f"""cast(CASE WHEN hg_bins = 0 THEN {_PPM}
+              ELSE {_PPM} - cast({_PPM} as {_DEC}) * cast(hgs_bins as {_DEC})
+                   div cast(hg_bins as {_DEC})
+            END as bigint)"""
+        ).alias("homogeneity_ppm"),
+        F.expr(
+            f"""cast(CASE WHEN hs_bins = 0 THEN {_PPM}
+              ELSE {_PPM} - cast({_PPM} as {_DEC}) * cast(hsg_bins as {_DEC})
+                   div cast(hs_bins as {_DEC})
+            END as bigint)"""
+        ).alias("completeness_ppm"),
+    ).select(
+        "*",
+        F.expr(
+            f"""cast(CASE WHEN homogeneity_ppm > 0 AND completeness_ppm > 0
+              THEN 2 * homogeneity_ppm * completeness_ppm
+                   div (homogeneity_ppm + completeness_ppm)
+              ELSE 0 END as bigint)"""
+        ).alias("v_ppm"),
     )
 
 
 def vmeasure_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → ONE row of log-binned V-measure statistics over the
-    same deterministic sys/gold clusterings as ``ari_quality`` /
-    ``muc_quality`` (over-merge pairs of gold clusters, over-split
-    every doc_id ≡ 3 mod 8 — see ``_sys_gold_docs``)."""
+    synthesized clusterings (``_sys_gold_docs``)."""
     return vmeasure_over(_sys_gold_docs(spark, sf_dir))
+
+
+def _bins_sql(num: str, den: str) -> str:
+    return f"CAST(sum(c * (length(bin({num} // {den})) - 1)) AS BIGINT)"
 
 
 VMEASURE_QUALITY_SQL = f"""
 WITH docs AS (
 {_SYS_GOLD_SQL}
 ),
-cont AS (
-  SELECT sys, gold, CAST(count(*) AS BIGINT) AS c
-  FROM docs GROUP BY sys, gold
-),
-by_sys AS (SELECT sys, sum(c) AS n_sys FROM cont GROUP BY sys),
-by_gold AS (SELECT gold, sum(c) AS n_gold FROM cont GROUP BY gold),
-n AS (SELECT CAST(sum(n_sys) AS BIGINT) AS n_items FROM by_sys),
-cond AS (
-  SELECT CAST(sum(c * (length(bin(n_sys // c)) - 1)) AS BIGINT)
-           AS hgs_bins,
-         CAST(sum(c * (length(bin(n_gold // c)) - 1)) AS BIGINT)
-           AS hsg_bins
-  FROM cont JOIN by_sys USING (sys) JOIN by_gold USING (gold)
-),
-marg AS (
-  SELECT CAST(sum(CASE WHEN is_gold = 1
-           THEN size * (length(bin(n_items // size)) - 1) END) AS BIGINT)
-           AS hg_bins,
-         CAST(sum(CASE WHEN is_gold = 0
-           THEN size * (length(bin(n_items // size)) - 1) END) AS BIGINT)
-           AS hs_bins,
-         CAST(max(n_items) AS BIGINT) AS n_items
-  FROM (SELECT 1 AS is_gold, n_gold AS size FROM by_gold
-        UNION ALL
-        SELECT 0 AS is_gold, n_sys AS size FROM by_sys), n
+{_cont_sql("docs")},
+n_rel AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cont),
+sums AS (
+  SELECT CAST(sum(c) AS BIGINT) AS n_items,
+         {_bins_sql("n_sys", "c")} AS hgs_bins,
+         {_bins_sql("n", "n_gold")} AS hg_bins,
+         {_bins_sql("n_gold", "c")} AS hsg_bins,
+         {_bins_sql("n", "n_sys")} AS hs_bins
+  FROM ({_cells_sql()}), n_rel
 ),
 ppm AS (
   SELECT n_items, hgs_bins, hg_bins, hsg_bins, hs_bins,
@@ -716,7 +589,7 @@ ppm AS (
          CAST(CASE WHEN hs_bins = 0 THEN {_PPM}
            ELSE {_PPM} - CAST({_PPM} AS HUGEINT) * hsg_bins // hs_bins
          END AS BIGINT) AS completeness_ppm
-  FROM cond, marg
+  FROM sums
 )
 SELECT *,
        CAST(CASE WHEN homogeneity_ppm > 0 AND completeness_ppm > 0
@@ -727,21 +600,14 @@ FROM ppm
 """
 
 
-# ---------------------------------------------------------------------------
-# BLANC (Recasens & Hovy 2011) — bilateral link/non-link pair agreement
-# ---------------------------------------------------------------------------
-
-
 def blanc_over(docs: DataFrame) -> DataFrame:
-    """Generic core over ANY (sys, gold) item relation: one BLANC row.
+    """Generic core over ANY (sys, gold) item relation: one BLANC row
+    (Recasens & Hovy 2011), read off ``_pair_counts``.
 
     BLANC averages two F-scores: one over COREFERENCE links (pairs the
     clustering puts together) and one over NON-coreference links (pairs
     it keeps apart) — rewarding both decisions symmetrically where
-    pairwise F1 sees only the together side (singletons and the
-    dominant apart-mass are invisible to it, the imbalance BLANC was
-    designed to fix). Everything reduces to the four ari_quality pair
-    counts:
+    pairwise F1 sees only the together side:
 
       rc = p_both                 (right coref links)
       P_c = p_both / p_sys        R_c = p_both / p_gold
@@ -749,94 +615,52 @@ def blanc_over(docs: DataFrame) -> DataFrame:
       P_n = rn / (rn + p_gold − p_both)  R_n = rn / (rn + p_sys − p_both)
       BLANC = (F_c + F_n) / 2
 
-    computed here the SORT-FREE way (muc_over lesson, not ari's
-    windows): p_both straight off the contingency rows, p_sys / p_gold
-    from the two per-side size groupBys, all three tagged into one
-    conditional aggregation — no window, no join. All counts are
-    integer identities Σ c·(c−1)/2; t and rn pass int64 past ~4.3e9
-    items, so the ppm arithmetic is widened decimal(38,0)/HUGEINT.
-    Every numerator is non-negative (rn ≥ 0 because p_sys + p_gold −
-    p_both ≤ t: together-in-either pairs can't exceed all pairs), so
-    plain integer ppm division is engine-exact without the ari
-    sign-split. Zero denominators (no links on a side) force that
-    component's P/R/F to 0 and the two F-scores are STILL averaged —
-    an intentional, hash-pinned deviation from the extended BLANC
-    scorer (Luo et al. 2014), which reports only the defined
-    component when the other side is 0/0-degenerate (so perfect
-    all-singleton agreement scores 0.5 here, 1.0 there;
+    t and rn pass int64 past ~4.3e9 items, so the ppm arithmetic is
+    widened decimal(38,0)/HUGEINT. Every numerator is non-negative
+    (p_sys + p_gold − p_both ≤ t), so plain integer ppm division is
+    engine-exact without the ari sign-split. Zero denominators (no
+    links on a side) force that component's P/R/F to 0 and the two
+    F-scores are STILL averaged — an intentional, hash-pinned deviation
+    from the extended BLANC scorer (Luo et al. 2014), which reports
+    only the defined component when the other side is 0/0-degenerate
+    (so perfect all-singleton agreement scores 0.5 here, 1.0 there;
     ``test_blanc_all_singletons_guard`` codifies 500000 ppm, and the
     DuckDB oracle mirrors the same rule). Non-degenerate inputs match
     the reference scorer exactly.
-
-    Scale shape (100 TB): identical to muc_quality — ONE item-scale
-    shuffle keyed (sys, gold), then bounded sort-free groupBys.
-
-    Reference analog: ``eval_cluster_linking.py`` reports pairwise
-    cluster P/R/F1 — exactly BLANC's coreference-link half; BLANC adds
-    the non-link half and their average.
     """
-    cont = docs.groupBy("sys", "gold").agg(
-        F.count("*").cast("bigint").alias("c")
-    ).persist()  # read three times, contingency-bounded
-    both = cont.select(
-        F.lit(2).alias("side"), F.col("c").alias("size")
-    )
-    by_sys = cont.groupBy("sys").agg(F.sum("c").alias("size")).select(
-        F.lit(0).alias("side"), "size"
-    )
-    by_gold = cont.groupBy("gold").agg(F.sum("c").alias("size")).select(
-        F.lit(1).alias("side"), "size"
-    )
-    pairs = F.expr("size * (size - 1) div 2")
-    agg = (
-        both.unionByName(by_sys).unionByName(by_gold).agg(
-            F.sum(F.when(F.col("side") == 0, F.col("size")))
-            .cast("bigint").alias("n_items"),
-            F.coalesce(
-                F.sum(F.when(F.col("side") == 0, pairs)), F.lit(0)
-            ).cast("bigint").alias("p_sys"),
-            F.coalesce(
-                F.sum(F.when(F.col("side") == 1, pairs)), F.lit(0)
-            ).cast("bigint").alias("p_gold"),
-            F.coalesce(
-                F.sum(F.when(F.col("side") == 2, pairs)), F.lit(0)
-            ).cast("bigint").alias("p_both"),
-        )
-    )
-    dec = "decimal(38,0)"
-    wide = agg.select(
+    wide = _pair_counts(_contingency(docs)).select(
         "n_items",
         "p_sys",
         "p_gold",
         "p_both",
         F.expr(
-            f"cast(cast(n_items as {dec}) * (n_items - 1) div 2"
-            f" - cast(p_sys as {dec}) - cast(p_gold as {dec})"
-            f" + cast(p_both as {dec}) as {dec})"
+            f"cast(cast(n_items as {_DEC}) * (n_items - 1) div 2"
+            f" - cast(p_sys as {_DEC}) - cast(p_gold as {_DEC})"
+            f" + cast(p_both as {_DEC}) as {_DEC})"
         ).alias("rn"),
     )
     ppm = wide.select(
         "*",
         F.expr(
             f"""cast(CASE WHEN p_sys = 0 THEN 0
-              ELSE {_PPM} * cast(p_both as {dec}) div cast(p_sys as {dec})
+              ELSE {_PPM} * cast(p_both as {_DEC}) div cast(p_sys as {_DEC})
             END as bigint)"""
         ).alias("link_precision_ppm"),
         F.expr(
             f"""cast(CASE WHEN p_gold = 0 THEN 0
-              ELSE {_PPM} * cast(p_both as {dec}) div cast(p_gold as {dec})
+              ELSE {_PPM} * cast(p_both as {_DEC}) div cast(p_gold as {_DEC})
             END as bigint)"""
         ).alias("link_recall_ppm"),
         F.expr(
             f"""cast(CASE WHEN rn + p_gold - p_both = 0 THEN 0
-              ELSE {_PPM} * rn div (rn + cast(p_gold as {dec})
-                                       - cast(p_both as {dec}))
+              ELSE {_PPM} * rn div (rn + cast(p_gold as {_DEC})
+                                       - cast(p_both as {_DEC}))
             END as bigint)"""
         ).alias("nonlink_precision_ppm"),
         F.expr(
             f"""cast(CASE WHEN rn + p_sys - p_both = 0 THEN 0
-              ELSE {_PPM} * rn div (rn + cast(p_sys as {dec})
-                                       - cast(p_both as {dec}))
+              ELSE {_PPM} * rn div (rn + cast(p_sys as {_DEC})
+                                       - cast(p_both as {_DEC}))
             END as bigint)"""
         ).alias("nonlink_recall_ppm"),
     ).select(
@@ -844,19 +668,19 @@ def blanc_over(docs: DataFrame) -> DataFrame:
         "p_sys",
         "p_gold",
         "p_both",
-        F.col("rn").cast("decimal(38,0)").cast("string").alias("rn_pairs"),
+        F.col("rn").cast(_DEC).cast("string").alias("rn_pairs"),
         "link_precision_ppm",
         "link_recall_ppm",
         "nonlink_precision_ppm",
         "nonlink_recall_ppm",
         F.expr(
-            f"""cast(CASE WHEN link_precision_ppm + link_recall_ppm = 0
+            """cast(CASE WHEN link_precision_ppm + link_recall_ppm = 0
               THEN 0 ELSE 2 * link_precision_ppm * link_recall_ppm
                    div (link_precision_ppm + link_recall_ppm)
             END as bigint)"""
         ).alias("link_f1_ppm"),
         F.expr(
-            f"""cast(CASE WHEN nonlink_precision_ppm + nonlink_recall_ppm = 0
+            """cast(CASE WHEN nonlink_precision_ppm + nonlink_recall_ppm = 0
               THEN 0 ELSE 2 * nonlink_precision_ppm * nonlink_recall_ppm
                    div (nonlink_precision_ppm + nonlink_recall_ppm)
             END as bigint)"""
@@ -871,9 +695,8 @@ def blanc_over(docs: DataFrame) -> DataFrame:
 
 
 def blanc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → ONE row of BLANC statistics over the same
-    deterministic sys/gold clusterings as ``ari_quality`` /
-    ``muc_quality`` / ``vmeasure_quality`` (see ``_sys_gold_docs``)."""
+    """documents → ONE row of BLANC statistics over the synthesized
+    clusterings (``_sys_gold_docs``)."""
     return blanc_over(_sys_gold_docs(spark, sf_dir))
 
 
@@ -881,29 +704,12 @@ BLANC_QUALITY_SQL = f"""
 WITH docs AS (
 {_SYS_GOLD_SQL}
 ),
-cont AS (
-  SELECT sys, gold, CAST(count(*) AS BIGINT) AS c
-  FROM docs GROUP BY sys, gold
-),
-agg AS (
-  SELECT CAST(sum(CASE WHEN side = 0 THEN size END) AS BIGINT) AS n_items,
-         CAST(coalesce(sum(CASE WHEN side = 0
-             THEN size * (size - 1) // 2 END), 0) AS BIGINT) AS p_sys,
-         CAST(coalesce(sum(CASE WHEN side = 1
-             THEN size * (size - 1) // 2 END), 0) AS BIGINT) AS p_gold,
-         CAST(coalesce(sum(CASE WHEN side = 2
-             THEN size * (size - 1) // 2 END), 0) AS BIGINT) AS p_both
-  FROM (SELECT 2 AS side, c AS size FROM cont
-        UNION ALL
-        SELECT 0 AS side, sum(c) AS size FROM cont GROUP BY sys
-        UNION ALL
-        SELECT 1 AS side, sum(c) AS size FROM cont GROUP BY gold)
-),
+{_cont_sql("docs")},
 wide AS (
   SELECT n_items, p_sys, p_gold, p_both,
          CAST(n_items AS HUGEINT) * (n_items - 1) // 2
            - p_sys - p_gold + p_both AS rn
-  FROM agg
+  FROM ({_counts_sql()})
 ),
 ppm AS (
   SELECT n_items, p_sys, p_gold, p_both,

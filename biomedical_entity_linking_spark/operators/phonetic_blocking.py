@@ -109,8 +109,6 @@ def _keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RULES = ("k_prefix", "k_soundex", "k_langlen")
 
-from .er_quality import _pair_sum  # the Σ c·(c−1)/2 one-row relation
-
 
 def _grouping_layout() -> tuple[list[tuple[str, ...]], list[str],
                                 list[tuple[str, ...]]]:

@@ -222,7 +222,8 @@ def run_pipeline(
     vertex_blocklist: DataFrame | None = None,
     entity_urls: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Full pipeline. Returns the stage DataFrames (all checkpointed).
+    """Full pipeline. Returns the checkpoint-backed stage DataFrames and
+    the lineage ``counters``.
 
     ``norm_rules``: optional (domain, token, replacement) dictionary — the
     abbreviation-map analog the reference applies inside its main flow
@@ -361,9 +362,9 @@ def run_pipeline(
         ).filter(~F.col("pruned")),
     )
 
-    # edges = deterministic filter over the checkpointed score table — a
-    # derived view, not a barrier (the filter re-applies identically on
-    # resume; the 'edges' parquet write/read round-trip bought nothing)
+    # edges = threshold filter over the in-memory score relation, consumed
+    # by CC below and not returned: _finalize_score() releases that
+    # relation, so any later action on it would recompute the pipeline
     edges = threshold_edges(scored_mem, cfg.threshold)
 
     if vertex_blocklist is not None:
@@ -485,7 +486,6 @@ def run_pipeline(
         "pairs_rid": pairs,
         "features": features,
         "scored": scored,
-        "edges": edges,
         "clusters": clusters,
         "counters": runner.counters,  # type: ignore[dict-item]
     }

@@ -360,14 +360,15 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
     add(
         "blocking_quality (pair-sum identity, no pair materialization)",
         E.queries()["blocking_quality"](spark, sf_dir),
-        # three count aggregations; the c·(c−1)/2 sums combine map-side so
-        # no stage ever holds a pair row; the only joins are 1-row×1-row
-        # summary assemblies (BroadcastNestedLoopJoin over single rows —
-        # sanctioned, same as pagerank's n_rel attach); vec_id pruned
-        ["partial_count", "partial_sum", "HashAggregate", "Batched: true",
-         "ReadSchema: struct<embedding:array<float>>"],
+        # one (cell8, label) contingency rolled up to 6/4 bits; each
+        # scheme's pair counts are the shared tagged-union agg, so the
+        # c·(c−1)/2 sums combine map-side, no stage ever holds a pair row
+        # and no join assembles the row; vec_id pruned
+        ["partial_count", "partial_sum", "HashAggregate", "Union",
+         "Batched: true", "ReadSchema: struct<embedding:array<float>,label:int>"],
         forbid=["CartesianProduct", "BatchEvalPython", "MapInPandas",
-                "SortMergeJoin"],
+                "SortMergeJoin", "BroadcastHashJoin",
+                "BroadcastNestedLoopJoin", "Window"],
     )
     add(
         "prefix_jaccard_join (exact set-similarity join, prefix-filtered)",
@@ -457,19 +458,22 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
                 "BatchEvalPython", "MapInPandas"],
     )
     add(
-        "ari_quality (contingency-only RI/ARI: one shuffle + bounded windows)",
+        "ari_quality (contingency-only RI/ARI: sort-free tagged-union counts)",
         E.queries()["ari_quality"](spark, sf_dir),
-        # pair counts come from the contingency relation alone — one
-        # hash agg + two windows; pairs never materialize as a join
-        ["HashAggregate", "Window", "Batched: true"],
-        forbid=["CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin",
-                "BatchEvalPython", "MapInPandas"],
+        # pair counts come from the contingency relation alone — its
+        # cells and per-side marginals tagged into one agg; no window,
+        # no join, pairs never materialize
+        ["HashAggregate", "Union", "Batched: true"],
+        forbid=["CartesianProduct", "SortMergeJoin", "BroadcastHashJoin",
+                "BroadcastNestedLoopJoin", "BatchEvalPython", "MapInPandas",
+                "Window"],
     )
     add(
         "muc_quality (missing-link counts off the contingency relation)",
         E.queries()["muc_quality"](spark, sf_dir),
         # one shuffle keyed (sys, gold); per-side sums are sort-free
-        # groupBys union'd into one agg — no window, no join of any kind
+        # groupBys union'd into the shared tagged-union agg — no window,
+        # no join of any kind
         ["HashAggregate", "Union", "Batched: true"],
         forbid=["CartesianProduct", "SortMergeJoin", "BroadcastHashJoin",
                 "BroadcastNestedLoopJoin", "BatchEvalPython", "MapInPandas",
@@ -478,11 +482,12 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
     add(
         "vmeasure_quality (log-binned entropies off the persisted contingency)",
         E.queries()["vmeasure_quality"](spark, sf_dir),
-        # one item-scale shuffle into the persisted contingency; marginal
-        # rejoins are sort-free key joins (broadcast at this SF), the item
-        # total N rides a 1-row broadcast loop join — the muc lesson:
-        # no Window anywhere
-        ["HashAggregate", "InMemoryTableScan", "Union", "Batched: true"],
+        # one item-scale shuffle into the persisted contingency; the
+        # per-cell marginal rejoins are sort-free key joins (broadcast at
+        # this SF), the item total N rides a 1-row broadcast loop join
+        # into ONE agg over cells — no Window anywhere
+        ["HashAggregate", "InMemoryTableScan", "BroadcastNestedLoopJoin",
+         "Batched: true"],
         forbid=["CartesianProduct", "BatchEvalPython", "MapInPandas",
                 "Window"],
     )
@@ -499,21 +504,23 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
     add(
         "blanc_quality (link/non-link pair counts, muc-style tagged union)",
         E.queries()["blanc_quality"](spark, sf_dir),
-        # one contingency shuffle; p_both/p_sys/p_gold via sort-free
-        # groupBys tagged into one agg — no window, no join
+        # one contingency shuffle; p_both/p_sys/p_gold via the shared
+        # tagged-union agg — no window, no join
         ["HashAggregate", "Union", "Batched: true"],
         forbid=["CartesianProduct", "SortMergeJoin", "BroadcastHashJoin",
                 "BroadcastNestedLoopJoin", "BatchEvalPython", "MapInPandas",
                 "Window"],
     )
     add(
-        "bcubed_quality (broadcast count dims, items never shuffle)",
+        "bcubed_quality (per-cell sums off the contingency, no item join)",
         E.queries()["bcubed_quality"](spark, sf_dir),
-        # the three count relations broadcast back onto items; the item
-        # relation reaches the final average without a shuffle of its own
-        ["BroadcastHashJoin", "partial_count", "Batched: true"],
+        # Σ c·(c·10⁶ div n_sys) over contingency cells joined to their
+        # marginals; items only feed the one contingency shuffle and are
+        # never joined back
+        ["InMemoryTableScan", "partial_count", "HashAggregate",
+         "Batched: true"],
         forbid=["CartesianProduct", "SortMergeJoin", "BatchEvalPython",
-                "MapInPandas"],
+                "MapInPandas", "Window"],
     )
     add(
         "event_sessions (gap-threshold sessionization, one stateless window)",
