@@ -146,7 +146,6 @@ def connected_components(
     iteration hits ``max_iterations`` without converging (bounded-iteration
     guard for adversarial chain topologies — SURVEY §7(b)).
     """
-    spark = edges.sparkSession
     # local contraction first: one shuffle-free pass collapses every chain
     # that lives inside a partition, so the star loop below usually needs
     # 1-2 rounds + confirmation instead of 4-5 (each round is several tiny
@@ -160,40 +159,27 @@ def connected_components(
         )
     ).localCheckpoint(eager=False)
     prev_sig = _checksum(cur)
-    # Size shuffle width to the edge count: each iteration is several tiny
-    # shuffles, and per-task overhead dominates when the default width (2x
-    # cores) far exceeds the data. ~100k edges per post-shuffle partition is
-    # the sweet spot; at 10^12-row scale this naturally saturates the
-    # configured width.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # never clamp below the executor-core count: a width smaller than the
-    # cluster leaves cores idle every CC round, which shows up directly in
-    # the N→4N scaling-efficiency number
-    cores = spark.sparkContext.defaultParallelism
-    cc_parts = max(
-        4, min(int(old_parts), max(cores, prev_sig[0] // 100_000 + 1))
-    )
+    # shuffle width stays the session's, which AQE coalesces to each
+    # round's tiny shuffles (session.get_spark); never set it here — the
+    # session conf is shared with the pipeline's async checkpoint writers
+    # planning on other threads
     iterations = 0
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
-        for _ in range(max_iterations):
-            iterations += 1
-            # lazy localCheckpoint: the checksum aggregation is the action
-            # that materializes it — one Spark job per iteration instead of
-            # two (eager checkpoint + checksum)
-            cur = _canonical(_small_star(_large_star(cur))).localCheckpoint(
-                eager=False
-            )
-            sig = _checksum(cur)
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iterations} iterations"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    for _ in range(max_iterations):
+        iterations += 1
+        # lazy localCheckpoint: the checksum aggregation is the action
+        # that materializes it — one Spark job per iteration instead of
+        # two (eager checkpoint + checksum)
+        cur = _canonical(_small_star(_large_star(cur))).localCheckpoint(
+            eager=False
+        )
+        sig = _checksum(cur)
+        if sig == prev_sig:
+            break
+        prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} iterations"
+        )
 
     # At convergence edges form stars rooted at the component minimum
     # (canonicalization stores them as (root, member)). Direction-agnostic

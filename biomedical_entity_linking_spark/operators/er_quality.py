@@ -6,10 +6,11 @@ and every one is a function of the contingency counts ``c`` of the
 (sys, gold) cells, their two per-side marginals and N. So how agreement
 is counted lives in one place:
 
-* ``_contingency`` — items (or counted cells to roll up) → the persisted
+* ``_contingency`` — items (or counted cells to roll up) → the
   relation (sys, gold, c): one map-side-combinable shuffle, bounded by
-  the number of non-empty cells (≪ items), persisted because each
-  read-off below scans it three or four times.
+  the number of non-empty cells (≪ items), materialized (lazy
+  ``localCheckpoint``) because each read-off below scans it three or
+  four times.
 * ``_marginal`` — per side: (size, parts) = the cluster's item count and
   how many clusters of the OTHER side it intersects.
 
@@ -60,12 +61,14 @@ _BCUBED_BITS = 4  # system clustering under evaluation: 4-bit sign cells
 
 def _contingency(rows: DataFrame) -> DataFrame:
     """(sys, gold) items, or (sys, gold, c) cells to roll up → the
-    persisted contingency relation (sys, gold, c)."""
+    materialized contingency relation (sys, gold, c)."""
     c = F.sum("c") if "c" in rows.columns else F.count("*")
     return (
         rows.groupBy("sys", "gold")
         .agg(c.cast("bigint").alias("c"))
-        .persist()  # every read-off scans it three or four times
+        # every read-off scans it three or four times; lazy checkpoint:
+        # no cache-manager matching, so one query never warms another
+        .localCheckpoint(eager=False)
     )
 
 

@@ -44,12 +44,19 @@ HUGEINT (int128) — intermediate M-step products reach counts·SCALE²
 which is why the oracle widens; final outputs are cast back to BIGINT.
 
 Comparison fields over the ``documents`` table (doc_id, text, lang,
-source): γ_text = 48-char-normalized-text equality (the planted
+source): γ_text = 96-char-normalized-text equality (the planted
 exact-dup groups make this the match signal), γ_lang = language
 equality, γ_source = source equality. Candidate pairs block on the
 24-char normalized prefix — the skew-measured key from
 ``incremental.py`` (BLOCK_LEN 12 put 3.2M of 3.8M pairs under the one
 viral-title block at 1M docs; 24 reaches into the first body word).
+
+Shared relations: every query here (and ``ml_features.pair_features``)
+reads ONE blocked self-join, ``blocked_pairs`` (oracle:
+``blocked_pairs_sql``); the four pair-level queries read ONE
+posterior-edges relation, ``_posterior_edges`` — the blocked γ pairs,
+materialized by a lazy ``localCheckpoint``, joined to the ≤ 2^K-row
+per-pattern posterior broadcast (oracle: the ``edges`` CTE).
 
 Outputs:
 * ``fs_em_weights`` — the estimated MODEL: one row per observed
@@ -58,6 +65,12 @@ Outputs:
 * ``fs_pair_posteriors`` — the LINKER: every candidate pair whose
   posterior P(match|γ) ≥ 1/2, i.e. the edge list a downstream
   connected-components pass would cluster (``connected_components``).
+* ``fs_uncertain_pairs`` — the ``FS_LABEL_BUDGET`` pairs whose
+  posterior sits closest to 1/2 (uncertainty-sampling active learning).
+* ``fs_mutual_match`` — the mutual-best 1:1 pairs of the scored
+  candidate graph (one handshake round, ``mutual_best_over``).
+* ``fs_tf_posteriors`` — the posterior with Splink-style
+  term-frequency adjustment of the u-chain, kept where it is ≥ 1/2.
 """
 
 from __future__ import annotations
@@ -77,57 +90,108 @@ N_FIELDS = 3
 _INIT_LAM = SCALE // 10
 _INIT_M = 9 * SCALE // 10
 _INIT_U = SCALE // 10
+# γ in the FIXED field order every chain runs in: (γ column, compared value)
+FIELDS = (("g_text", "norm"), ("g_lang", "lang"), ("g_source", "source"))
+G_COLS = tuple(g for g, _ in FIELDS)
+
+
+# ---------------------------------------------------------------------------
+# the blocked comparison relation (shared with ml_features)
+# ---------------------------------------------------------------------------
+
+
+def norm_docs(docs: DataFrame, *cols: str) -> DataFrame:
+    """(doc_id, text, *cols) → (doc_id, *cols, norm): ``norm`` is the
+    NORM_LEN-char lowercased text every comparison and block key reads."""
+    return docs.select(
+        "doc_id", *cols, F.lower(F.substring("text", 1, NORM_LEN)).alias("norm")
+    )
+
+
+def blocked_pairs(docs: DataFrame) -> DataFrame:
+    """ANY (doc_id, norm, ...) relation → its blocked candidate pairs:
+    every (id_a < id_b) whose ``norm`` shares the BLOCK_LEN prefix, one
+    block-key equi-join, each other column carried per side as
+    ``{c}_a`` / ``{c}_b``."""
+    cols = [c for c in docs.columns if c != "doc_id"]
+
+    def side(s: str) -> DataFrame:
+        return docs.select(
+            F.col("doc_id").alias(f"id_{s}"),
+            F.substring("norm", 1, BLOCK_LEN).alias("bk"),
+            *(F.col(c).alias(f"{c}_{s}") for c in cols),
+        )
+
+    return (
+        side("a")
+        .join(side("b"), "bk")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .drop("bk")
+    )
+
+
+def blocked_pairs_sql(*cols: str, **derived: str) -> str:
+    """WITH-clause body mirroring ``norm_docs`` → ``blocked_pairs`` over
+    ``documents``: ``docs`` (doc_id, *cols, norm) and ``bpairs``, carrying
+    norm, every col and every ``derived`` per-doc expression (over
+    ``norm``) per side as ``{c}_a`` / ``{c}_b``."""
+    extra = "".join(f", {e} AS {k}" for k, e in derived.items())
+    carried = ",\n         ".join(
+        f"a.{c} AS {c}_a, b.{c} AS {c}_b" for c in ("norm", *cols, *derived)
+    )
+    return f"""docs AS (
+  SELECT doc_id, {", ".join(cols)}, lower(substr(text, 1, {NORM_LEN})) AS norm
+  FROM documents
+),
+sides AS (
+  SELECT *, substr(norm, 1, {BLOCK_LEN}) AS bk{extra} FROM docs
+),
+bpairs AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         {carried}
+  FROM sides a JOIN sides b ON a.bk = b.bk AND a.doc_id < b.doc_id
+)"""
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return norm_docs(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), "lang", "source"
+    )
 
 
 def _gamma_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked candidate pairs with their binary comparison vector."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id",
-        "lang",
-        "source",
-        F.lower(F.substring("text", 1, NORM_LEN)).alias("norm"),
-    )
-    a = docs.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("norm").alias("norm_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("source").alias("src_a"),
-        F.substring("norm", 1, BLOCK_LEN).alias("bk"),
-    )
-    b = docs.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("norm").alias("norm_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("source").alias("src_b"),
-        F.substring("norm", 1, BLOCK_LEN).alias("bk"),
-    )
-    return (
-        a.join(b, "bk")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("norm_a") == F.col("norm_b"))
-            .cast("int")
-            .alias("g_text"),
-            (F.col("lang_a") == F.col("lang_b"))
-            .cast("int")
-            .alias("g_lang"),
-            (F.col("src_a") == F.col("src_b"))
-            .cast("int")
-            .alias("g_source"),
-        )
+    """Blocked candidate pairs with their binary comparison vector γ and
+    the A side's compared values (the tf lookup keys)."""
+    return blocked_pairs(_docs(spark, sf_dir)).select(
+        "id_a",
+        "id_b",
+        *(f"{c}_a" for _, c in FIELDS),
+        *(
+            (F.col(f"{c}_a") == F.col(f"{c}_b")).cast("int").alias(g)
+            for g, c in FIELDS
+        ),
     )
 
 
 def _pattern_counts(gamma: DataFrame) -> DataFrame:
-    return gamma.groupBy("g_text", "g_lang", "g_source").agg(
-        F.count("*").alias("n_pairs")
-    )
+    return gamma.groupBy(*G_COLS).agg(F.count("*").alias("n_pairs"))
+
+
+# ---------------------------------------------------------------------------
+# EM over the ≤ 2^K pattern counts: exact integer arithmetic
+# ---------------------------------------------------------------------------
 
 
 def _clamp(x: int) -> int:
     return min(SCALE - 1, max(1, x))
+
+
+def _chain(g: tuple[int, ...], p: int, probs: list[int]) -> int:
+    """p · Π_k P(γ_k | class): the multiply-shift chain in the FIXED
+    field order (``_pm_expr`` is its SQL text)."""
+    for k in range(N_FIELDS):
+        p = p * (probs[k] if g[k] else SCALE - probs[k]) // SCALE
+    return p
 
 
 def _e_step(
@@ -139,12 +203,8 @@ def _e_step(
     """(γ, n, resp) rows — fixed field order, integer multiply-shift."""
     rows = []
     for g, n in patterns:
-        pm, pu = lam, SCALE - lam
-        for k in range(N_FIELDS):
-            pm = pm * (m[k] if g[k] else SCALE - m[k]) // SCALE
-            pu = pu * (u[k] if g[k] else SCALE - u[k]) // SCALE
-        resp = pm * SCALE // max(1, pm + pu)
-        rows.append((g, n, resp))
+        pm, pu = _chain(g, lam, m), _chain(g, SCALE - lam, u)
+        rows.append((g, n, pm * SCALE // max(1, pm + pu)))
     return rows
 
 
@@ -185,28 +245,56 @@ def _fit(gamma: DataFrame):
     pat_rows = _pattern_counts(gamma).collect()  # ≤ 2^K rows, bounded
     # by the comparison-space cardinality, never by the data
     patterns = sorted(
-        ((r["g_text"], r["g_lang"], r["g_source"]), r["n_pairs"])
-        for r in pat_rows
+        (tuple(r[g] for g in G_COLS), r["n_pairs"]) for r in pat_rows
     )
     return _em(patterns)
 
 
+_G_FIELDS = [T.StructField(g, T.IntegerType(), False) for g in G_COLS]
 _MODEL_SCHEMA = T.StructType(
     [
-        T.StructField("g_text", T.IntegerType(), False),
-        T.StructField("g_lang", T.IntegerType(), False),
-        T.StructField("g_source", T.IntegerType(), False),
-        T.StructField("n_pairs", T.LongType(), False),
-        T.StructField("match_resp_q", T.LongType(), False),
-        T.StructField("lambda_q", T.LongType(), False),
-        T.StructField("m_text_q", T.LongType(), False),
-        T.StructField("u_text_q", T.LongType(), False),
-        T.StructField("m_lang_q", T.LongType(), False),
-        T.StructField("u_lang_q", T.LongType(), False),
-        T.StructField("m_source_q", T.LongType(), False),
-        T.StructField("u_source_q", T.LongType(), False),
+        *_G_FIELDS,
+        *(
+            T.StructField(c, T.LongType(), False)
+            for c in (
+                "n_pairs", "match_resp_q", "lambda_q",
+                "m_text_q", "u_text_q", "m_lang_q", "u_lang_q",
+                "m_source_q", "u_source_q",
+            )
+        ),
     ]
 )
+_RESP_SCHEMA = T.StructType(
+    [
+        *_G_FIELDS,
+        T.StructField("match_resp_q", T.LongType(), False),
+        T.StructField("pm_q", T.LongType(), False),
+    ]
+)
+
+
+def _posterior_edges(spark: SparkSession, sf_dir: str, *carry: str):
+    """→ ((λ, m, u), edges): every blocked candidate pair (id_a, id_b,
+    *carry, γ) joined to its pattern's posterior ``match_resp_q`` and
+    m-chain numerator ``pm_q`` = λ·Π P(γ_k | match) — a ≤ 2^K-row
+    broadcast, so the pairs are scored by ONE hash lookup, no re-scoring
+    pass, no driver round-trip of pair rows.
+
+    The γ relation is read twice (the EM's pattern count, then this
+    join), so it is materialized by a lazy ``localCheckpoint``: the count
+    job fills it, the join reads it back, the blocked self-join runs
+    once, and nothing enters the session's cache manager — one query
+    never warms another."""
+    gamma = (
+        _gamma_pairs(spark, sf_dir)
+        .select("id_a", "id_b", *carry, *G_COLS)
+        .localCheckpoint(eager=False)
+    )
+    lam, m, u, rows = _fit(gamma)
+    resp_rel = spark.createDataFrame(
+        [(*g, resp, _chain(g, lam, m)) for g, _, resp in rows], _RESP_SCHEMA
+    )
+    return (lam, m, u), gamma.join(F.broadcast(resp_rel), list(G_COLS))
 
 
 def fs_em_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,43 +303,20 @@ def fs_em_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-units (divide by SCALE for probabilities)."""
     lam, m, u, rows = _fit(_gamma_pairs(spark, sf_dir))
     out = [
-        (g[0], g[1], g[2], n, resp, lam, m[0], u[0], m[1], u[1], m[2], u[2])
+        (*g, n, resp, lam, m[0], u[0], m[1], u[1], m[2], u[2])
         for g, n, resp in rows
     ]
-    return spark.createDataFrame(out, _MODEL_SCHEMA).orderBy(
-        "g_text", "g_lang", "g_source"
-    )
+    return spark.createDataFrame(out, _MODEL_SCHEMA).orderBy(*G_COLS)
 
 
 def fs_pair_posteriors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (id_a, id_b, γ, match_resp_q) for every candidate
-    pair with posterior ≥ 1/2 — the probabilistic match edge list.
-
-    The per-pattern posterior is a ≤ 2^K-row broadcast joined onto the
-    blocked pair relation: the pairs are scored by ONE hash lookup, no
-    re-scoring pass, no driver round-trip of pair rows. The γ relation
-    is persisted so the blocked self-join runs ONCE — the EM's pattern
-    aggregation and the posterior rejoin both read the materialized
-    pairs (measured: the un-persisted form paid the join twice)."""
-    gamma = _gamma_pairs(spark, sf_dir).persist()
-    _, _, _, rows = _fit(gamma)
-    resp_rel = spark.createDataFrame(
-        [(g[0], g[1], g[2], resp) for g, _, resp in rows],
-        T.StructType(
-            [
-                T.StructField("g_text", T.IntegerType(), False),
-                T.StructField("g_lang", T.IntegerType(), False),
-                T.StructField("g_source", T.IntegerType(), False),
-                T.StructField("match_resp_q", T.LongType(), False),
-            ]
-        ),
-    )
+    pair with posterior ≥ 1/2 — the probabilistic match edge list, read
+    off the shared posterior-edges relation."""
+    _, edges = _posterior_edges(spark, sf_dir)
     return (
-        gamma.join(F.broadcast(resp_rel), ["g_text", "g_lang", "g_source"])
-        .filter(F.col("match_resp_q") >= SCALE // 2)
-        .select(
-            "id_a", "id_b", "g_text", "g_lang", "g_source", "match_resp_q"
-        )
+        edges.filter(F.col("match_resp_q") >= SCALE // 2)
+        .select("id_a", "id_b", *G_COLS, "match_resp_q")
         .orderBy("id_a", "id_b")
     )
 
@@ -261,35 +326,42 @@ def fs_pair_posteriors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _pm_expr(src: str, pcte: str) -> str:
+def _pm_expr(src: str, pcte: str, row: str = "pat", tf: bool = False) -> str:
     """Chained multiply-shift for P(γ | class) in the FIXED field order —
-    textual mirror of ``_e_step``'s loop."""
-    num = f"{pcte}.lam"
-    for k, col in enumerate(("g_text", "g_lang", "g_source"), start=1):
-        agree = f"{pcte}.m{k}" if src == "m" else f"{pcte}.u{k}"
-        base = num if k > 1 or src == "m" else f"({SCALE} - {pcte}.lam)"
+    textual mirror of ``_chain``. ``tf`` prices each agreeing field at
+    the row's own term frequency (``row.tf_*``) instead of u_k."""
+    num = f"{pcte}.lam" if src == "m" else f"({SCALE} - {pcte}.lam)"
+    for k, g in enumerate(G_COLS, start=1):
+        p = f"{pcte}.{src}{k}"
+        agree = f"{row}.tf{g[1:]}" if tf else p
         num = (
-            f"(({base} * (CASE WHEN pat.{col} = 1 THEN {agree} "
-            f"ELSE {SCALE} - {agree} END)) // {SCALE})"
+            f"(({num} * (CASE WHEN {row}.{g} = 1 THEN {agree} "
+            f"ELSE {SCALE} - {p} END)) // {SCALE})"
         )
     return num
 
 
+def _resp_sql(pm: str, pu: str) -> str:
+    return (
+        f"(({pm}) * {SCALE}) // GREATEST(CAST(1 AS HUGEINT), "
+        f"({pm}) + ({pu}))"
+    )
+
+
 def _em_sql() -> str:
-    """WITH-clause body: pat → p0 → (e1,p1) … (eN,pN) → efinal."""
+    """WITH-clause body: docs → bpairs → gpairs → pat → p0 → (e1,p1) …
+    (eN,pN) → efinal (γ, n, resp, pm) → edges (gpairs ⋈ efinal)."""
+    values = ", ".join(f"{c}_a" for _, c in FIELDS)
+    gamma = ",\n         ".join(
+        f"CAST({c}_a = {c}_b AS INT) AS {g}" for g, c in FIELDS
+    )
+    on = " AND ".join(f"g.{g} = e.{g}" for g in G_COLS)
     parts = [
-        f"""docs AS (
-  SELECT doc_id, lang, source, lower(substr(text, 1, {NORM_LEN})) AS norm
-  FROM documents
-),
+        f"""{blocked_pairs_sql("lang", "source")},
 gpairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         CASE WHEN a.norm = b.norm THEN 1 ELSE 0 END AS g_text,
-         CASE WHEN a.lang = b.lang THEN 1 ELSE 0 END AS g_lang,
-         CASE WHEN a.source = b.source THEN 1 ELSE 0 END AS g_source
-  FROM docs a JOIN docs b
-    ON substr(a.norm, 1, {BLOCK_LEN}) = substr(b.norm, 1, {BLOCK_LEN})
-   AND a.doc_id < b.doc_id
+  SELECT id_a, id_b, {values},
+         {gamma}
+  FROM bpairs
 ),
 pat AS (
   SELECT g_text, g_lang, g_source, CAST(count(*) AS HUGEINT) AS n
@@ -302,22 +374,19 @@ p0 AS (
          CAST({_INIT_M} AS HUGEINT) AS m3, CAST({_INIT_U} AS HUGEINT) AS u3
 )"""
     ]
-    for i in range(1, N_ITER + 1):
-        p = f"p{i - 1}"
-        # pm starts from lam, pu from SCALE - lam; _pm_expr handles both
-        pm = _pm_expr("m", p)
-        pu = _pm_expr("u", p)
-        parts.append(
-            f"""e{i} AS (
-  SELECT g_text, g_lang, g_source, n,
-         (pm * {SCALE}) // GREATEST(CAST(1 AS HUGEINT), pm + pu) AS resp
+
+    def e_cte(name: str, p: str) -> str:
+        return f"""{name} AS (
+  SELECT g_text, g_lang, g_source, n, pm, {_resp_sql("pm", "pu")} AS resp
   FROM (
     SELECT pat.g_text, pat.g_lang, pat.g_source, pat.n,
-           {pm} AS pm, {pu} AS pu
+           {_pm_expr("m", p)} AS pm, {_pm_expr("u", p)} AS pu
     FROM pat, {p}
   )
 )"""
-        )
+
+    for i in range(1, N_ITER + 1):
+        parts.append(e_cte(f"e{i}", f"p{i - 1}"))
         sums = f"""SELECT
      GREATEST(CAST(1 AS HUGEINT), sum(n * resp)) AS sm,
      GREATEST(CAST(1 AS HUGEINT), sum(n * ({SCALE} - resp))) AS su,
@@ -345,16 +414,11 @@ p0 AS (
   FROM ({sums})
 )"""
         )
-    pf = f"p{N_ITER}"
+    parts.append(e_cte("efinal", f"p{N_ITER}"))
     parts.append(
-        f"""efinal AS (
-  SELECT g_text, g_lang, g_source, n,
-         (pm * {SCALE}) // GREATEST(CAST(1 AS HUGEINT), pm + pu) AS resp
-  FROM (
-    SELECT pat.g_text, pat.g_lang, pat.g_source, pat.n,
-           {_pm_expr('m', pf)} AS pm, {_pm_expr('u', pf)} AS pu
-    FROM pat, {pf}
-  )
+        f"""edges AS (
+  SELECT g.*, e.resp, e.pm
+  FROM gpairs g JOIN efinal e ON {on}
 )"""
     )
     return ",\n".join(parts)
@@ -362,9 +426,7 @@ p0 AS (
 
 FS_EM_WEIGHTS_SQL = f"""
 WITH {_em_sql()}
-SELECT CAST(e.g_text AS INT) AS g_text,
-       CAST(e.g_lang AS INT) AS g_lang,
-       CAST(e.g_source AS INT) AS g_source,
+SELECT e.g_text, e.g_lang, e.g_source,
        CAST(e.n AS BIGINT) AS n_pairs,
        CAST(e.resp AS BIGINT) AS match_resp_q,
        CAST(p.lam AS BIGINT) AS lambda_q,
@@ -378,16 +440,10 @@ ORDER BY g_text, g_lang, g_source
 
 FS_PAIR_POSTERIORS_SQL = f"""
 WITH {_em_sql()}
-SELECT g.id_a, g.id_b,
-       CAST(g.g_text AS INT) AS g_text,
-       CAST(g.g_lang AS INT) AS g_lang,
-       CAST(g.g_source AS INT) AS g_source,
-       CAST(e.resp AS BIGINT) AS match_resp_q
-FROM gpairs g
-JOIN efinal e
-  ON g.g_text = e.g_text AND g.g_lang = e.g_lang
- AND g.g_source = e.g_source
-WHERE e.resp >= {SCALE // 2}
+SELECT id_a, id_b, g_text, g_lang, g_source,
+       CAST(resp AS BIGINT) AS match_resp_q
+FROM edges
+WHERE resp >= {SCALE // 2}
 ORDER BY id_a, id_b
 """
 
@@ -412,35 +468,19 @@ def fs_uncertain_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k: ORDER BY (unc_q, id_a, id_b) LIMIT k, which Spark plans as
     TakeOrderedAndProject — a per-partition heap of k rows then a k-row
     driver merge, NO global sort shuffle, safe at any pair count. The
-    posterior lookup is the same ≤ 2^K-row broadcast as
-    ``fs_pair_posteriors``; nothing new shuffles.
+    posterior lookup is the shared posterior-edges relation; nothing new
+    shuffles.
 
     Reference analog: none (the reference links against a fixed
     ontology; labeling-loop tooling is part of the grafted ER tier)."""
-    gamma = _gamma_pairs(spark, sf_dir).persist()
-    _, _, _, rows = _fit(gamma)
-    resp_rel = spark.createDataFrame(
-        [(g[0], g[1], g[2], resp) for g, _, resp in rows],
-        T.StructType(
-            [
-                T.StructField("g_text", T.IntegerType(), False),
-                T.StructField("g_lang", T.IntegerType(), False),
-                T.StructField("g_source", T.IntegerType(), False),
-                T.StructField("match_resp_q", T.LongType(), False),
-            ]
-        ),
-    )
-    half = SCALE // 2
+    _, edges = _posterior_edges(spark, sf_dir)
     return (
-        gamma.join(F.broadcast(resp_rel), ["g_text", "g_lang", "g_source"])
-        .select(
+        edges.select(
             "id_a",
             "id_b",
-            "g_text",
-            "g_lang",
-            "g_source",
+            *G_COLS,
             "match_resp_q",
-            F.abs(F.col("match_resp_q") - F.lit(half)).alias("unc_q"),
+            F.abs(F.col("match_resp_q") - F.lit(SCALE // 2)).alias("unc_q"),
         )
         .orderBy("unc_q", "id_a", "id_b")
         .limit(FS_LABEL_BUDGET)
@@ -449,16 +489,10 @@ def fs_uncertain_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 FS_UNCERTAIN_PAIRS_SQL = f"""
 WITH {_em_sql()}
-SELECT g.id_a, g.id_b,
-       CAST(g.g_text AS INT) AS g_text,
-       CAST(g.g_lang AS INT) AS g_lang,
-       CAST(g.g_source AS INT) AS g_source,
-       CAST(e.resp AS BIGINT) AS match_resp_q,
-       CAST(abs(e.resp - {SCALE // 2}) AS BIGINT) AS unc_q
-FROM gpairs g
-JOIN efinal e
-  ON g.g_text = e.g_text AND g.g_lang = e.g_lang
- AND g.g_source = e.g_source
+SELECT id_a, id_b, g_text, g_lang, g_source,
+       CAST(resp AS BIGINT) AS match_resp_q,
+       CAST(abs(resp - {SCALE // 2}) AS BIGINT) AS unc_q
+FROM edges
 ORDER BY unc_q, id_a, id_b
 LIMIT {FS_LABEL_BUDGET}
 """
@@ -480,10 +514,10 @@ def fs_mutual_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE other (master-record pairing), where threshold+CC would
     happily chain A−B−C into one cluster.
 
-    Relational shape: score every blocked candidate pair by the same
-    ≤ 2^K-row posterior broadcast as ``fs_pair_posteriors`` (NO ½
-    filter — contention inside blocks is the point), symmetrize the
-    edge list (one union — each direction carries its partner), take
+    Relational shape: score every blocked candidate pair by the shared
+    posterior-edges relation (NO ½ filter — contention inside blocks is
+    the point), symmetrize the edge list (one union — each direction
+    carries its partner), take
     each node's argmax by (posterior DESC, partner id ASC — posteriors
     are pattern-level so ties are pervasive and the id tiebreak makes
     the matching DETERMINISTIC), and keep edges whose two endpoints
@@ -499,22 +533,7 @@ def fs_mutual_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     per mention (one-sided argmax, W2/A3); the SYMMETRIC handshake is
     the grafted ER tier's 1:1 constraint.
     """
-    gamma = _gamma_pairs(spark, sf_dir).persist()
-    _, _, _, rows = _fit(gamma)
-    resp_rel = spark.createDataFrame(
-        [(g[0], g[1], g[2], resp) for g, _, resp in rows],
-        T.StructType(
-            [
-                T.StructField("g_text", T.IntegerType(), False),
-                T.StructField("g_lang", T.IntegerType(), False),
-                T.StructField("g_source", T.IntegerType(), False),
-                T.StructField("match_resp_q", T.LongType(), False),
-            ]
-        ),
-    )
-    edges = gamma.join(
-        F.broadcast(resp_rel), ["g_text", "g_lang", "g_source"]
-    ).select("id_a", "id_b", "match_resp_q")
+    _, edges = _posterior_edges(spark, sf_dir)
     return mutual_best_over(edges, "match_resp_q")
 
 
@@ -556,17 +575,10 @@ def mutual_best_over(edges: DataFrame, w: str) -> DataFrame:
 
 FS_MUTUAL_MATCH_SQL = f"""
 WITH {_em_sql()},
-edges AS (
-  SELECT g.id_a, g.id_b, CAST(e.resp AS BIGINT) AS match_resp_q
-  FROM gpairs g
-  JOIN efinal e
-    ON g.g_text = e.g_text AND g.g_lang = e.g_lang
-   AND g.g_source = e.g_source
-),
 sym AS (
-  SELECT id_a AS u, id_b AS v, match_resp_q FROM edges
+  SELECT id_a AS u, id_b AS v, CAST(resp AS BIGINT) AS match_resp_q FROM edges
   UNION ALL
-  SELECT id_b AS u, id_a AS v, match_resp_q FROM edges
+  SELECT id_b AS u, id_a AS v, CAST(resp AS BIGINT) AS match_resp_q FROM edges
 ),
 best AS (
   SELECT u, v, match_resp_q FROM (
@@ -588,45 +600,6 @@ ORDER BY id_a, id_b
 # ---------------------------------------------------------------------------
 
 
-def _value_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked candidate pairs carrying the γ vector AND the agreed
-    field values (needed to look up their term frequencies)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id",
-        "lang",
-        "source",
-        F.lower(F.substring("text", 1, NORM_LEN)).alias("norm"),
-    )
-    a = docs.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("norm").alias("norm_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("source").alias("src_a"),
-        F.substring("norm", 1, BLOCK_LEN).alias("bk"),
-    )
-    b = docs.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("norm").alias("norm_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("source").alias("src_b"),
-        F.substring("norm", 1, BLOCK_LEN).alias("bk"),
-    )
-    return (
-        a.join(b, "bk")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            "norm_a",
-            "lang_a",
-            "src_a",
-            (F.col("norm_a") == F.col("norm_b")).cast("int").alias("g_text"),
-            (F.col("lang_a") == F.col("lang_b")).cast("int").alias("g_lang"),
-            (F.col("src_a") == F.col("src_b")).cast("int").alias("g_source"),
-        )
-    )
-
-
 def fs_tf_posteriors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (id_a, id_b, γ, match_resp_q, match_resp_tf_q):
     the FS posterior WITH Splink-style term-frequency adjustment.
@@ -643,16 +616,16 @@ def fs_tf_posteriors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     replaces u_k in the u-chain (disagreement keeps the global
     ``SCALE − u_k`` — tf says nothing about how records disagree, the
-    same asymmetry Splink applies); the m-chain is untouched. The
-    pair posterior is then the SAME multiply-shift chain as
-    ``fs_pair_posteriors``, with the EM's converged parameters
-    embedded as literals.
+    same asymmetry Splink applies); the m-chain is untouched.
 
-    Pattern-level broadcast scoring is structurally impossible here —
-    the posterior depends on VALUES, not just the γ-pattern — so the
-    plan is the honest value-keyed one: three frequency relations
-    (one map-side-combinable count each), the two small ones
-    broadcast, the text-norm one a linear keyed join; the tf product
+    Everything pattern-level comes from the shared posterior-edges
+    relation: the unadjusted ``match_resp_q`` and the m-chain numerator
+    ``pm_q``. Only the tf-adjusted u-chain depends on VALUES, so only it
+    runs per pair — the SAME multiply-shift chain with the EM's
+    converged (λ, u_k) embedded as literals. The value lookups are the
+    honest value-keyed plan: three frequency relations (one
+    map-side-combinable count each), the two small ones broadcast, the
+    text-norm one a linear keyed join; the tf product
     ``cnt · SCALE`` is widened to decimal(38,0)/HUGEINT (int64 would
     overflow past ~9e9 rows). Output keeps BOTH posteriors so the
     adjustment is auditable pair by pair; the match decision
@@ -662,79 +635,40 @@ def fs_tf_posteriors(spark: SparkSession, sf_dir: str) -> DataFrame:
     rarity into the encoder; tf adjustment is the grafted ER tier
     (Splink's flagship feature on exactly this kind of field set).
     """
-    dec = "decimal(38,0)"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id",
-        "lang",
-        "source",
-        F.lower(F.substring("text", 1, NORM_LEN)).alias("norm"),
-    )
+    docs = _docs(spark, sf_dir)
     n_docs = docs.count()  # O(1) scalar, needed as a literal denominator
-    tf = {}
-    for field, col in (("text", "norm"), ("lang", "lang"),
-                       ("source", "source")):
-        tf[field] = docs.groupBy(F.col(col).alias(f"v_{field}")).agg(
+    (lam, _, u), scored = _posterior_edges(
+        spark, sf_dir, *(f"{c}_a" for _, c in FIELDS)
+    )
+    for g, c in FIELDS:
+        tf = docs.groupBy(F.col(c).alias(f"{c}_a")).agg(
             F.expr(
-                f"least({SCALE} - 1, greatest(1, cast(count(*) as {dec})"
-                f" * {SCALE} div {n_docs}))"
+                f"least({SCALE} - 1, greatest(1, cast(count(*) as "
+                f"decimal(38,0)) * {SCALE} div {n_docs}))"
             )
             .cast("bigint")
-            .alias(f"tf_{field}")
+            .alias(f"tf{g[1:]}")
         )
-    vp = _value_pairs(spark, sf_dir).persist()
-    lam, m, u, _ = _fit(
-        vp.select("id_a", "id_b", "g_text", "g_lang", "g_source")
-    )
-    scored = (
-        vp.join(
-            tf["text"].withColumnRenamed("v_text", "norm_a"), "norm_a"
-        )
-        .join(
-            F.broadcast(
-                tf["lang"].withColumnRenamed("v_lang", "lang_a")
-            ),
-            "lang_a",
-        )
-        .join(
-            F.broadcast(
-                tf["source"].withColumnRenamed("v_source", "src_a")
-            ),
-            "src_a",
-        )
-    )
-    # the SAME fixed-order multiply-shift chain as _e_step / _pm_expr,
-    # with converged parameters as literals; tf_* replaces u_* in the
-    # u-chain on agreement only
-    gcols = ("g_text", "g_lang", "g_source")
-    tcols = ("tf_text", "tf_lang", "tf_source")
-    # seed as bigint so the whole multiply-shift chain promotes (bare
+        # the norm relation is corpus-sized: a keyed join; lang and
+        # source have a handful of values: broadcast
+        scored = scored.join(tf if c == "norm" else F.broadcast(tf), f"{c}_a")
+    # the m-chain numerator pm_q comes with the pattern posterior; only
+    # the u-chain is per pair — the SAME fixed-order multiply-shift as
+    # _chain, with tf_* replacing u_k on agreement (seeded as bigint: bare
     # int literals are 32-bit in Spark SQL and the products overflow)
-    pm = f"cast({lam} as bigint)"
-    pu_base = f"cast({SCALE - lam} as bigint)"
-    pu_tf = pu_base
-    for k, g in enumerate(gcols):
-        pm = (
-            f"(({pm} * (CASE WHEN {g} = 1 THEN {m[k]} "
-            f"ELSE {SCALE - m[k]} END)) div {SCALE})"
-        )
-        pu_base = (
-            f"(({pu_base} * (CASE WHEN {g} = 1 THEN {u[k]} "
-            f"ELSE {SCALE - u[k]} END)) div {SCALE})"
-        )
+    pu_tf = f"cast({SCALE - lam} as bigint)"
+    for k, g in enumerate(G_COLS):
         pu_tf = (
-            f"(({pu_tf} * (CASE WHEN {g} = 1 THEN {tcols[k]} "
+            f"(({pu_tf} * (CASE WHEN {g} = 1 THEN tf{g[1:]} "
             f"ELSE {SCALE - u[k]} END)) div {SCALE})"
         )
-    resp = f"(({pm}) * {SCALE}) div greatest(1, ({pm}) + ({pu_base}))"
-    resp_tf = f"(({pm}) * {SCALE}) div greatest(1, ({pm}) + ({pu_tf}))"
+    resp_tf = f"(pm_q * {SCALE}) div greatest(1, pm_q + {pu_tf})"
     return (
         scored.select(
             "id_a",
             "id_b",
-            "g_text",
-            "g_lang",
-            "g_source",
-            F.expr(resp).cast("bigint").alias("match_resp_q"),
+            *G_COLS,
+            "match_resp_q",
             F.expr(resp_tf).cast("bigint").alias("match_resp_tf_q"),
         )
         .filter(F.col("match_resp_tf_q") >= SCALE // 2)
@@ -743,81 +677,36 @@ def fs_tf_posteriors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tf_sql() -> str:
-    """The oracle's mirror: per-pair chains recomputed from p{N_ITER}
-    (HUGEINT all the way; same fixed field order, tf on agreement)."""
-    gcols = ("g_text", "g_lang", "g_source")
-    tcols = ("tf_text", "tf_lang", "tf_source")
-    pm = f"CAST(p.lam AS HUGEINT)"
-    pu_base = f"CAST({SCALE} - p.lam AS HUGEINT)"
-    pu_tf = pu_base
-    for k, g in enumerate(gcols, start=1):
-        pm = (
-            f"(({pm} * (CASE WHEN v.{gcols[k-1]} = 1 THEN p.m{k} "
-            f"ELSE {SCALE} - p.m{k} END)) // {SCALE})"
+    """The oracle's tf relations (one per field) and their joins onto
+    ``edges`` — the value-keyed lookups ``fs_tf_posteriors`` makes."""
+    ctes = ["nn AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM docs)"]
+    joins, cols = [], []
+    for g, c in FIELDS:
+        ctes.append(
+            f"""tf_{c} AS (
+  SELECT {c} AS v, LEAST({SCALE} - 1, GREATEST(1,
+           CAST(count(*) AS HUGEINT) * {SCALE} // (SELECT n FROM nn))) AS tf
+  FROM docs GROUP BY {c}
+)"""
         )
-        pu_base = (
-            f"(({pu_base} * (CASE WHEN v.{gcols[k-1]} = 1 THEN p.u{k} "
-            f"ELSE {SCALE} - p.u{k} END)) // {SCALE})"
-        )
-        pu_tf = (
-            f"(({pu_tf} * (CASE WHEN v.{gcols[k-1]} = 1 "
-            f"THEN CAST(v.{tcols[k-1]} AS HUGEINT) "
-            f"ELSE {SCALE} - p.u{k} END)) // {SCALE})"
-        )
-    return (
-        f"(({pm}) * {SCALE}) // GREATEST(CAST(1 AS HUGEINT),"
-        f" ({pm}) + ({pu_base})) AS resp,"
-        f" (({pm}) * {SCALE}) // GREATEST(CAST(1 AS HUGEINT),"
-        f" ({pm}) + ({pu_tf})) AS resp_tf"
-    )
+        joins.append(f"JOIN tf_{c} ON tf_{c}.v = e.{c}_a")
+        cols.append(f"tf_{c}.tf AS tf{g[1:]}")
+    return ",\n".join(ctes) + f""",
+v AS (
+  SELECT e.*, {", ".join(cols)}
+  FROM edges e
+  {" ".join(joins)}
+)"""
 
 
 FS_TF_POSTERIORS_SQL = f"""
 WITH {_em_sql()},
-nn AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM docs),
-tfn AS (
-  SELECT norm AS v, LEAST({SCALE} - 1, GREATEST(1,
-           CAST(count(*) AS HUGEINT) * {SCALE} // (SELECT n FROM nn)))
-         AS tf_text
-  FROM docs GROUP BY norm
-),
-tfl AS (
-  SELECT lang AS v, LEAST({SCALE} - 1, GREATEST(1,
-           CAST(count(*) AS HUGEINT) * {SCALE} // (SELECT n FROM nn)))
-         AS tf_lang
-  FROM docs GROUP BY lang
-),
-tfs AS (
-  SELECT source AS v, LEAST({SCALE} - 1, GREATEST(1,
-           CAST(count(*) AS HUGEINT) * {SCALE} // (SELECT n FROM nn)))
-         AS tf_source
-  FROM docs GROUP BY source
-),
-vpairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         a.norm AS norm_a, a.lang AS lang_a, a.source AS src_a,
-         CASE WHEN a.norm = b.norm THEN 1 ELSE 0 END AS g_text,
-         CASE WHEN a.lang = b.lang THEN 1 ELSE 0 END AS g_lang,
-         CASE WHEN a.source = b.source THEN 1 ELSE 0 END AS g_source
-  FROM docs a JOIN docs b
-    ON substr(a.norm, 1, {BLOCK_LEN}) = substr(b.norm, 1, {BLOCK_LEN})
-   AND a.doc_id < b.doc_id
-),
-v AS (
-  SELECT vp.*, tfn.tf_text, tfl.tf_lang, tfs.tf_source
-  FROM vpairs vp
-  JOIN tfn ON tfn.v = vp.norm_a
-  JOIN tfl ON tfl.v = vp.lang_a
-  JOIN tfs ON tfs.v = vp.src_a
-)
-SELECT id_a, id_b,
-       CAST(g_text AS INT) AS g_text,
-       CAST(g_lang AS INT) AS g_lang,
-       CAST(g_source AS INT) AS g_source,
+{_tf_sql()}
+SELECT id_a, id_b, g_text, g_lang, g_source,
        CAST(resp AS BIGINT) AS match_resp_q,
        CAST(resp_tf AS BIGINT) AS match_resp_tf_q
 FROM (
-  SELECT v.id_a, v.id_b, v.g_text, v.g_lang, v.g_source, {_tf_sql()}
+  SELECT v.*, {_resp_sql("v.pm", _pm_expr("u", "p", "v", tf=True))} AS resp_tf
   FROM v, p{N_ITER} p
 )
 WHERE resp_tf >= {SCALE // 2}

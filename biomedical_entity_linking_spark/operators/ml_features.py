@@ -8,10 +8,11 @@ The reference builds these rows in per-example Python inside its torch
 DataLoaders; at 10^12 documents the feature table itself is the
 expensive artifact, so here it is a first-class Catalyst relation:
 
-* blocking: the same 24-char normalized-prefix key the Fellegi–Sunter
-  linker blocks on (``fellegi_sunter.BLOCK_LEN`` — the skew-measured
-  key from ``incremental.py``), so this operator IS the feature stage
-  a learned scorer would drop into that pipeline;
+* blocking: the Fellegi–Sunter linker's own blocked self-join
+  (``fellegi_sunter.blocked_pairs`` on the 24-char normalized prefix —
+  the skew-measured key from ``incremental.py``; oracle:
+  ``blocked_pairs_sql``), so this operator IS the feature stage a
+  learned scorer would drop into that pipeline;
 * features, all INTEGER (cross-engine hashable — no float kernels to
   certify): exact 96-char-normalized-text equality, language/source
   agreement flags, built-in JVM ``levenshtein`` over 32-char prefixes
@@ -38,8 +39,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from biomedical_entity_linking_spark.operators.fellegi_sunter import (
-    BLOCK_LEN,
-    NORM_LEN,
+    blocked_pairs,
+    blocked_pairs_sql,
+    norm_docs,
 )
 
 LEV_LEN = 32  # levenshtein feature over this prefix — bounded per-row cost
@@ -57,33 +59,18 @@ def pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pair_features_over(raw_docs: DataFrame) -> DataFrame:
     """Generic core over ANY (doc_id, text, lang, source, n_chars)
     relation."""
-    docs = raw_docs.select(
-        "doc_id",
-        "lang",
-        "source",
-        "n_chars",
-        F.lower(F.substring("text", 1, NORM_LEN)).alias("norm"),
-    )
-    sides = docs.select(
-        "doc_id",
-        "lang",
-        "source",
-        "n_chars",
-        "norm",
-        F.substring("norm", 1, BLOCK_LEN).alias("bk"),
+    sides = norm_docs(raw_docs, "lang", "source", "n_chars").select(
+        "*",
         F.substring("norm", 1, LEV_LEN).alias("lev_key"),
         F.array_distinct(F.split("norm", " ")).alias("toks"),
     )
-    a = sides.select(*[F.col(c).alias(f"{c}_a") for c in sides.columns])
-    b = sides.select(*[F.col(c).alias(f"{c}_b") for c in sides.columns])
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
     uni = F.size("toks_a") + F.size("toks_b") - inter
     return (
-        a.join(b, F.col("bk_a") == F.col("bk_b"))
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
+        blocked_pairs(sides)
         .select(
-            F.col("doc_id_a").alias("id_a"),
-            F.col("doc_id_b").alias("id_b"),
+            "id_a",
+            "id_b",
             (F.col("norm_a") == F.col("norm_b")).cast("int").alias("f_exact"),
             (F.col("lang_a") == F.col("lang_b")).cast("int").alias("f_lang"),
             (F.col("source_a") == F.col("source_b"))
@@ -117,29 +104,26 @@ def pair_features_over(raw_docs: DataFrame) -> DataFrame:
     )
 
 
-PAIR_FEATURES_SQL = f"""
-WITH sides AS (
-  SELECT doc_id, lang, source, n_chars,
-         lower(substr(text, 1, {NORM_LEN})) AS norm,
-         substr(lower(substr(text, 1, {NORM_LEN})), 1, {BLOCK_LEN}) AS bk,
-         substr(lower(substr(text, 1, {NORM_LEN})), 1, {LEV_LEN}) AS lev_key,
-         list_distinct(string_split(lower(substr(text, 1, {NORM_LEN})), ' '))
-           AS toks
-  FROM documents
+_PAIRS = blocked_pairs_sql(
+    "lang",
+    "source",
+    "n_chars",
+    lev_key=f"substr(norm, 1, {LEV_LEN})",
+    toks="list_distinct(string_split(norm, ' '))",
 )
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(a.norm = b.norm AS INT) AS f_exact,
-       CAST(a.lang = b.lang AS INT) AS f_lang,
-       CAST(a.source = b.source AS INT) AS f_source,
-       CAST(levenshtein(a.lev_key, b.lev_key) AS INT) AS f_lev32,
-       CAST(len(list_intersect(a.toks, b.toks)) AS INT) AS f_tok_inter,
-       CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))
-            AS INT) AS f_tok_union,
-       CAST((len(list_intersect(a.toks, b.toks)) * {_PPM})
-            // (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))
-            AS BIGINT) AS f_jaccard_ppm,
-       CAST(abs(a.n_chars - b.n_chars) AS BIGINT) AS f_len_diff
-FROM sides a
-JOIN sides b ON a.bk = b.bk AND a.doc_id < b.doc_id
+_INTER = "len(list_intersect(toks_a, toks_b))"
+_UNION = f"(len(toks_a) + len(toks_b) - {_INTER})"
+PAIR_FEATURES_SQL = f"""
+WITH {_PAIRS}
+SELECT id_a, id_b,
+       CAST(norm_a = norm_b AS INT) AS f_exact,
+       CAST(lang_a = lang_b AS INT) AS f_lang,
+       CAST(source_a = source_b AS INT) AS f_source,
+       CAST(levenshtein(lev_key_a, lev_key_b) AS INT) AS f_lev32,
+       CAST({_INTER} AS INT) AS f_tok_inter,
+       CAST({_UNION} AS INT) AS f_tok_union,
+       CAST(({_INTER} * {_PPM}) // {_UNION} AS BIGINT) AS f_jaccard_ppm,
+       CAST(abs(n_chars_a - n_chars_b) AS BIGINT) AS f_len_diff
+FROM bpairs
 ORDER BY id_a, id_b
 """

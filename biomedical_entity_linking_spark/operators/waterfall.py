@@ -27,10 +27,10 @@ Relational construction, per pass i over the current pools:
 3. anti-join both pools against the new links' ids.
 
 K passes = K bounded rounds (one map-side-combinable count + one
-equi-join on key + one anti-join each); each pass's links relation is
-persisted so pass i+1's pool lineage reads a materialized few-MB
-relation instead of recomputing the cascade (at 100 TB the pools
-themselves would checkpoint per pass — the loop structure is the same).
+equi-join on key + one anti-join each); each pass's links relation and
+pool are materialized (lazy ``localCheckpoint``) so pass i+1's pool
+lineage reads a few-MB relation instead of recomputing the cascade, and
+nothing is left in the session's cache manager.
 No window, no pairs beyond the unique-key join, nothing quadratic.
 
 Input: synthesized two-file records from doc_id (even = file A, odd =
@@ -129,12 +129,11 @@ def waterfall_link_over(recs: DataFrame, keys: list[str]) -> DataFrame:
     and the twice-referenced agg subtree re-computed the whole pool
     lineage per side — 68 parquet scans in the sf0.1 plan. Same links:
     a side with count ≠ 1 fails its ``HAVING`` in the old form and the
-    ``ca/cb = 1`` filter here.) Pools are persisted per pass — the
-    few-MB surviving-record relation each later pass re-reads (at 100 TB
-    these become the per-pass pool checkpoints the module doc
-    describes)."""
+    ``ca/cb = 1`` filter here.) Pools are checkpointed per pass — the
+    few-MB surviving-record relation each later pass re-reads — lazily,
+    with no cache-manager matching, so one query never warms another."""
     links: DataFrame | None = None
-    pool = recs.persist()
+    pool = recs.localCheckpoint(eager=False)
     is_a = F.col("side") == "a"
     for i, k in enumerate(keys, 1):
         new = (
@@ -150,14 +149,17 @@ def waterfall_link_over(recs: DataFrame, keys: list[str]) -> DataFrame:
             .select(
                 "id_a", "id_b", F.lit(i).cast("int").alias("pass_no")
             )
-            .persist()  # few-MB link relation; caps pool lineage depth
+            # few-MB link relation; caps pool lineage depth
+            .localCheckpoint(eager=False)
         )
         links = new if links is None else links.unionByName(new)
         if i < len(keys):
             taken = new.select(F.col("id_a").alias("rec_id")).unionByName(
                 new.select(F.col("id_b").alias("rec_id"))
             )
-            pool = pool.join(taken, "rec_id", "left_anti").persist()
+            pool = pool.join(taken, "rec_id", "left_anti").localCheckpoint(
+                eager=False
+            )
     return links.orderBy("id_a")
 
 

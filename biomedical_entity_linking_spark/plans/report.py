@@ -363,12 +363,26 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
         # one (cell8, label) contingency rolled up to 6/4 bits; each
         # scheme's pair counts are the shared tagged-union agg, so the
         # c·(c−1)/2 sums combine map-side, no stage ever holds a pair row
-        # and no join assembles the row; vec_id pruned
-        ["partial_count", "partial_sum", "HashAggregate", "Union",
-         "Batched: true", "ReadSchema: struct<embedding:array<float>,label:int>"],
+        # and no join assembles the row; the contingencies are lazily
+        # checkpointed (ExistingRDD), the item scan sits below — next entry
+        ["partial_sum", "HashAggregate", "Union", "Scan ExistingRDD"],
         forbid=["CartesianProduct", "BatchEvalPython", "MapInPandas",
                 "SortMergeJoin", "BroadcastHashJoin",
                 "BroadcastNestedLoopJoin", "Window"],
+    )
+    from biomedical_entity_linking_spark.operators import er_quality
+
+    add(
+        "blocking_quality contingency count (the item scan below its "
+        "checkpoint)",
+        er_quality._embedding_cells(spark, sf_dir, 8)
+        .groupBy("sys", "gold")
+        .count(),
+        # map-side-combinable count over the vectorized scan; vec_id pruned
+        ["partial_count", "HashAggregate", "Batched: true",
+         "ReadSchema: struct<embedding:array<float>,label:int>"],
+        forbid=["CartesianProduct", "BatchEvalPython", "MapInPandas",
+                "SortMergeJoin", "Window"],
     )
     add(
         "prefix_jaccard_join (exact set-similarity join, prefix-filtered)",
@@ -424,9 +438,12 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
     add(
         "fs_tf_posteriors (value-keyed tf joins, literal-embedded chain)",
         E.queries()["fs_tf_posteriors"](spark, sf_dir),
-        # tf relations are count aggs; the chain is pure JVM expression;
-        # lang/source tf relations broadcast
-        ["HashAggregate", "BroadcastHashJoin", "Batched: true"],
+        # tf relations are count aggs over the scan; the posterior edges
+        # are the checkpointed γ pairs (ExistingRDD) × the pattern
+        # broadcast; the tf u-chain is pure JVM expression; lang/source
+        # tf relations broadcast
+        ["HashAggregate", "BroadcastHashJoin", "Batched: true",
+         "Scan ExistingRDD"],
         forbid=["CartesianProduct", "BroadcastNestedLoopJoin",
                 "BatchEvalPython", "MapInPandas"],
     )
@@ -434,8 +451,10 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
         "waterfall_link (K-pass unique-key cascade: counts + anti-joins)",
         E.queries()["waterfall_link"](spark, sf_dir),
         # per pass: one map-side-combinable count agg, one key equi-join,
-        # one anti-join; nothing quadratic, no window
-        ["HashAggregate", "Batched: true"],
+        # one anti-join, each pass's links and pool lazily checkpointed —
+        # the top plan is the union of the K checkpointed link relations;
+        # nothing quadratic, no window
+        ["Scan ExistingRDD", "Union"],
         forbid=["CartesianProduct", "BroadcastNestedLoopJoin",
                 "BatchEvalPython", "MapInPandas", "Window"],
     )
@@ -462,8 +481,8 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
         E.queries()["ari_quality"](spark, sf_dir),
         # pair counts come from the contingency relation alone — its
         # cells and per-side marginals tagged into one agg; no window,
-        # no join, pairs never materialize
-        ["HashAggregate", "Union", "Batched: true"],
+        # no join, pairs never materialize; contingency checkpointed
+        ["HashAggregate", "Union", "Scan ExistingRDD"],
         forbid=["CartesianProduct", "SortMergeJoin", "BroadcastHashJoin",
                 "BroadcastNestedLoopJoin", "BatchEvalPython", "MapInPandas",
                 "Window"],
@@ -473,21 +492,21 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
         E.queries()["muc_quality"](spark, sf_dir),
         # one shuffle keyed (sys, gold); per-side sums are sort-free
         # groupBys union'd into the shared tagged-union agg — no window,
-        # no join of any kind
-        ["HashAggregate", "Union", "Batched: true"],
+        # no join of any kind; contingency checkpointed
+        ["HashAggregate", "Union", "Scan ExistingRDD"],
         forbid=["CartesianProduct", "SortMergeJoin", "BroadcastHashJoin",
                 "BroadcastNestedLoopJoin", "BatchEvalPython", "MapInPandas",
                 "Window"],
     )
     add(
-        "vmeasure_quality (log-binned entropies off the persisted contingency)",
+        "vmeasure_quality (log-binned entropies off the checkpointed "
+        "contingency)",
         E.queries()["vmeasure_quality"](spark, sf_dir),
-        # one item-scale shuffle into the persisted contingency; the
+        # one item-scale shuffle into the checkpointed contingency; the
         # per-cell marginal rejoins are sort-free key joins (broadcast at
         # this SF), the item total N rides a 1-row broadcast loop join
         # into ONE agg over cells — no Window anywhere
-        ["HashAggregate", "InMemoryTableScan", "BroadcastNestedLoopJoin",
-         "Batched: true"],
+        ["HashAggregate", "Scan ExistingRDD", "BroadcastNestedLoopJoin"],
         forbid=["CartesianProduct", "BatchEvalPython", "MapInPandas",
                 "Window"],
     )
@@ -505,8 +524,8 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
         "blanc_quality (link/non-link pair counts, muc-style tagged union)",
         E.queries()["blanc_quality"](spark, sf_dir),
         # one contingency shuffle; p_both/p_sys/p_gold via the shared
-        # tagged-union agg — no window, no join
-        ["HashAggregate", "Union", "Batched: true"],
+        # tagged-union agg — no window, no join; contingency checkpointed
+        ["HashAggregate", "Union", "Scan ExistingRDD"],
         forbid=["CartesianProduct", "SortMergeJoin", "BroadcastHashJoin",
                 "BroadcastNestedLoopJoin", "BatchEvalPython", "MapInPandas",
                 "Window"],
@@ -515,10 +534,9 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
         "bcubed_quality (per-cell sums off the contingency, no item join)",
         E.queries()["bcubed_quality"](spark, sf_dir),
         # Σ c·(c·10⁶ div n_sys) over contingency cells joined to their
-        # marginals; items only feed the one contingency shuffle and are
-        # never joined back
-        ["InMemoryTableScan", "partial_count", "HashAggregate",
-         "Batched: true"],
+        # marginals; items only feed the one contingency shuffle (below
+        # its checkpoint) and are never joined back
+        ["Scan ExistingRDD", "HashAggregate"],
         forbid=["CartesianProduct", "SortMergeJoin", "BatchEvalPython",
                 "MapInPandas", "Window"],
     )
@@ -562,8 +580,9 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
         "broadcast per-pattern posterior)",
         E.queries()["fs_pair_posteriors"](spark, sf_dir),
         # the ≤ 2^K-row resp relation must broadcast onto the pair
-        # relation; the pair generation itself is a block-key equi-join
-        ["BroadcastHashJoin", "Batched: true"],
+        # relation; the blocked γ pairs are lazily checkpointed (the EM
+        # count fills them), the block-key equi-join sits below
+        ["BroadcastHashJoin", "Scan ExistingRDD"],
         forbid=["CartesianProduct", "BroadcastNestedLoopJoin",
                 "BatchEvalPython", "MapInPandas"],
     )
@@ -573,8 +592,9 @@ def audit(sf_dir: str = "/root/testdata/sf0.01") -> str:
         E.queries()["fs_uncertain_pairs"](spark, sf_dir),
         # the k-row selection must be a per-partition heap + k-row driver
         # merge (TakeOrderedAndProject), NEVER a global range-partitioned
-        # sort; posterior lookup stays the broadcast of ≤ 2^K rows
-        ["TakeOrderedAndProject", "BroadcastHashJoin", "Batched: true"],
+        # sort; posterior lookup stays the broadcast of ≤ 2^K rows onto
+        # the checkpointed γ pairs
+        ["TakeOrderedAndProject", "BroadcastHashJoin", "Scan ExistingRDD"],
         forbid=["rangepartitioning", "CartesianProduct",
                 "BroadcastNestedLoopJoin", "BatchEvalPython", "MapInPandas"],
     )

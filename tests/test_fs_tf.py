@@ -7,7 +7,7 @@ from biomedical_entity_linking_spark.operators.fellegi_sunter import (
     NORM_LEN,
     SCALE,
     _fit,
-    _value_pairs,
+    _gamma_pairs,
     fs_tf_posteriors,
 )
 
@@ -76,7 +76,7 @@ def test_fs_tf_matches_python_rescore(spark, tmp_path):
     spark.createDataFrame(
         docs, "doc_id bigint, text string, lang string, source string"
     ).write.parquet(f"{sf}/documents.parquet")
-    vp = _value_pairs(spark, sf)
+    vp = _gamma_pairs(spark, sf)
     lam, m, u, _ = _fit(
         vp.select("id_a", "id_b", "g_text", "g_lang", "g_source")
     )
